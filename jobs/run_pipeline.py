@@ -35,7 +35,6 @@ def main(argv=None) -> None:
     ap.add_argument("--wave-size", type=int, default=64)
     ap.add_argument("--salt-n", type=int, default=8)
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--no-link", action="store_true")
     args = ap.parse_args(argv)
 
     from microdata_rdf_streaming_parser_js_spark.plans.pipeline import run_pipeline

@@ -21,7 +21,6 @@ from __future__ import annotations
 from typing import NamedTuple
 
 from .handlers import ITEM_PROPERTY_HANDLERS
-from .html_events import HtmlTagEventParser
 from .registry import (
     DEFAULT_VOCAB_REGISTRY,
     RDF_NS,

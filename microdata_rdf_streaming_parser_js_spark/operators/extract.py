@@ -27,8 +27,7 @@ from typing import TYPE_CHECKING
 from pyspark.sql import types as T
 
 from ..functions.charset import decode_html, sniff_charset
-from ..functions.microdata import MicrodataExtractor
-from ..functions.html_events import HtmlTagEventParser
+from ..functions.microdata import MicrodataExtractor, parse_html
 
 if TYPE_CHECKING:
     import pandas as pd
@@ -69,18 +68,7 @@ def _extract_page(base_iri: str, html, vocab_registry, xml_mode: bool,
         html = decode_html(bytes(html))
     elif len(html) > max_html_bytes:
         raise ValueError(f"html too large: {len(html)} chars")
-    extractor = MicrodataExtractor(base_iri or "", vocab_registry)
-    if xml_mode:
-        from ..functions.html_events import XmlTagEventParser
-
-        tokenizer = XmlTagEventParser(extractor)
-    else:
-        from ..functions.fast_html import FastHtmlTokenizer
-
-        tokenizer = FastHtmlTokenizer(extractor)
-    tokenizer.feed(html)
-    tokenizer.end()
-    return extractor.triples
+    return parse_html(html, base_iri or "", vocab_registry, xml_mode)
 
 
 def make_extract_fn(vocab_registry: dict | None = None, xml_mode: bool = False):

@@ -9,12 +9,13 @@ classic "group / score / rank-1" shape:
   mentions --groupBy(norm_key)--> candidates --score--> row_number()==1
 
 Scale notes:
-- normalization is pure column expressions (JVM codegen);
-- scoring runs in an Arrow-batched iterator pandas UDF, NOT per-row
-  Python;
-- the argmax is `row_number` over (mention) ordered by score desc —
-  one shuffle on mention_key; AQE skew-join handles hot names
-  ("home", "index", ...).
+- normalization and scoring are pure column expressions / window
+  aggregates (JVM codegen), no Python crossing;
+- the argmax is `first()` over (mention_key) ordered by frequency desc —
+  one shuffle on mention_key; AQE skew handling covers hot names
+  ("home", "index", ...);
+- ``score_mentions_pandas`` is the grouped pandas-UDF scoring hook a
+  model-based scorer would use; only plans/queries.py runs it.
 
 The output mapping feeds canonicalize.canonicalize_subjects.
 """
@@ -60,9 +61,7 @@ def detect_mentions(
     )
 
 
-def score_and_link(
-    mentions: "DataFrame", min_score: float = 0.0, salt_partitions: int | None = None
-) -> "DataFrame":
+def score_and_link(mentions: "DataFrame") -> "DataFrame":
     """Cluster co-referent mentions and emit (iri -> canonical_iri).
 
     Candidate generation: exact normalized-key blocking (groupBy
@@ -70,27 +69,10 @@ def score_and_link(
     (surface-form frequency, then lexicographic IRI) — computed with
     window aggregates, fully JVM-side. The canonical entity for a key
     is the rank-1 candidate; every other member maps onto it.
-
-    ``salt_partitions``: pre-shuffle salt for pathologically hot keys —
-    splits a hot key into N sub-aggregations and merges (two-phase agg)
-    before the final window.
     """
-    freq_src = mentions
-    if salt_partitions:
-        # two-phase count: partial per (key, salt) then merge per key
-        salted = mentions.withColumn(
-            "_salt", F.pmod(F.hash("entity_iri"), F.lit(salt_partitions))
-        )
-        partial = salted.groupBy("mention_key", "_salt", "entity_iri").agg(
-            F.count("*").alias("_cnt")
-        )
-        freq = partial.groupBy("mention_key", "entity_iri").agg(
-            F.sum("_cnt").alias("n_mentions")
-        )
-    else:
-        freq = freq_src.groupBy("mention_key", "entity_iri").agg(
-            F.count("*").alias("n_mentions")
-        )
+    freq = mentions.groupBy("mention_key", "entity_iri").agg(
+        F.count("*").alias("n_mentions")
+    )
 
     # rank-1 pick without a self-join: first() over the ordered window
     # (one shuffle on mention_key total; the window frame default
@@ -161,35 +143,6 @@ def score_mentions_pandas(mentions: "DataFrame") -> "DataFrame":
     return mentions.groupBy("mention_key").applyInPandas(
         score_block, schema=MENTION_SCORE_SCHEMA
     )
-
-
-def link_entities_scored(
-    triples: "DataFrame",
-    name_preds: tuple[str, ...] = (SCHEMA_NAME,),
-    min_score: float = 0.5,
-) -> "DataFrame":
-    """Scored linking path: block -> pandas-UDF score -> drop weak
-    candidates -> frequency+score argmax -> functional mapping."""
-    mentions = detect_mentions(triples, name_preds)
-    scored = score_mentions_pandas(mentions).filter(F.col("score") >= min_score)
-    freq = scored.groupBy("mention_key", "entity_iri").agg(
-        F.count("*").alias("n_mentions"), F.max("score").alias("best_score")
-    )
-    w = (
-        Window.partitionBy("mention_key")
-        .orderBy(
-            F.col("best_score").desc(),
-            F.col("n_mentions").desc(),
-            F.col("entity_iri").asc(),
-        )
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    mapping = (
-        freq.withColumn("canonical_iri", F.first("entity_iri").over(w))
-        .filter(F.col("entity_iri") != F.col("canonical_iri"))
-        .select(F.col("entity_iri").alias("iri"), "canonical_iri")
-    )
-    return mapping.groupBy("iri").agg(F.min("canonical_iri").alias("canonical_iri"))
 
 
 def fuzzy_link_mentions(

@@ -4,10 +4,10 @@
         -> skolemize -> entity-link -> canonicalize -> dedup
         -> materialize nodes/edges/triples + _progress checkpoints
 
-The only Python crossings are extraction (Arrow) and nothing else;
-every other stage is JVM column expressions / shuffles. Buckets are
-processed in waves so a failed run resumes from the last committed
-wave's checkpoint (anti-join on the _progress ledger).
+The only Python crossing is extraction (Arrow); every other stage is
+JVM column expressions / shuffles. Buckets are processed in waves so a
+failed run resumes from the last committed wave's checkpoint (anti-join
+on the _progress ledger).
 """
 
 from __future__ import annotations
@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..operators.canonicalize import canonicalize_subjects, dedup_triples
 from ..operators.extract import extract_triples
-from ..operators.linking import link_entities, link_entities_scored
+from ..operators.linking import link_entities
 from ..operators.skolemize import skolemize
 from ..sources.writers import completed_buckets, materialize_wave, with_host_bucket
 
@@ -27,32 +27,17 @@ if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
 
 
-def build_triples(
-    pages: "DataFrame",
-    vocab_registry: dict | None = None,
-    link: bool = True,
-    dedup: bool = True,
-    linker: str = "frequency",
-) -> "DataFrame":
-    """Logical plan pages -> canonical triples (no writes).
+def link_and_dedup(triples: "DataFrame") -> "DataFrame":
+    """Lazy plan skolemized triples -> canonical triples: the entity-link
+    mapping is built from ``triples`` and joined back onto them, so the
+    input is read twice; persist it first to extract each page once."""
+    mapping = link_entities(triples)
+    return dedup_triples(canonicalize_subjects(triples, mapping), per_graph=True)
 
-    ``linker`` selects the entity-link mapping builder: "frequency"
-    (pure-JVM argmax, the fast default) or "scored" (grouped pandas-
-    UDF scorer, linking.link_entities_scored — the hook where a
-    model-based scorer plugs in)."""
-    if linker not in ("frequency", "scored"):
-        raise ValueError(f"unknown linker {linker!r}")
-    triples = skolemize(extract_triples(pages, vocab_registry))
-    if link:
-        # triples feed both the mapping build and the rewrite join;
-        # persist so the Python extraction stage runs exactly once.
-        triples = triples.persist()
-        build = link_entities if linker == "frequency" else link_entities_scored
-        mapping = build(triples)
-        triples = canonicalize_subjects(triples, mapping)
-    if dedup:
-        triples = dedup_triples(triples, per_graph=True)
-    return triples
+
+def build_triples(pages: "DataFrame", vocab_registry: dict | None = None) -> "DataFrame":
+    """Logical plan pages -> canonical triples (no writes, no cache)."""
+    return link_and_dedup(skolemize(extract_triples(pages, vocab_registry)))
 
 
 def run_pipeline(
@@ -65,12 +50,13 @@ def run_pipeline(
     vocab_registry: dict | None = None,
     input_fingerprint: str = "",
     resume: bool = True,
-    linker: str = "frequency",
 ) -> dict:
     """Execute the full pipeline with per-bucket checkpoints.
 
     Returns a small lineage/metrics dict. Re-running after a crash
-    skips buckets already in the ledger (resume=True).
+    skips buckets already in the ledger (resume=True). Each wave's
+    extraction is cached for the wave only, so the run leaves Spark's
+    cache as it found it.
     """
     run_id = uuid.uuid4().hex[:12]
     pages_b = with_host_bucket(pages, n_buckets)
@@ -79,26 +65,24 @@ def run_pipeline(
     todo = sorted(set(range(n_buckets)) - done)
     waves = [todo[i : i + wave_size] for i in range(0, len(todo), wave_size)]
 
-    total = 0
     for wave in waves:
-        wave_pages = pages_b.filter(F.col("host_bucket").isin(wave))
-        triples = build_triples(
-            wave_pages.drop("host_bucket"), vocab_registry, linker=linker
-        )
-        triples = with_host_bucket(triples, n_buckets)
-        materialize_wave(
-            spark,
-            triples,
-            out_dir,
-            wave,
-            salt_n=salt_n,
-            input_fingerprint=input_fingerprint,
-            run_id=run_id,
-        )
-        total += 1
+        wave_pages = pages_b.filter(F.col("host_bucket").isin(wave)).drop("host_bucket")
+        extracted = skolemize(extract_triples(wave_pages, vocab_registry)).persist()
+        try:
+            materialize_wave(
+                spark,
+                with_host_bucket(link_and_dedup(extracted), n_buckets),
+                out_dir,
+                wave,
+                salt_n=salt_n,
+                input_fingerprint=input_fingerprint,
+                run_id=run_id,
+            )
+        finally:
+            extracted.unpersist()
     return {
         "run_id": run_id,
         "n_buckets": n_buckets,
         "buckets_skipped": len(done),
-        "waves_run": total,
+        "waves_run": len(waves),
     }

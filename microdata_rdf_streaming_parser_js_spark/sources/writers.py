@@ -1,9 +1,9 @@
 """D6/D7 — graph materialization, host-bucket partitioning, skew
 salting, and resumable per-partition checkpoints with lineage.
 
-Tables written under ``out_dir`` (writer is pluggable: parquet dirs in
-the sandbox, Iceberg ``writeTo(...).overwritePartitions()`` on clusters
-with a catalog — same layout either way):
+Tables written under ``out_dir`` as parquet directories (the only
+writer; an Iceberg ``overwritePartitions()`` writer waits until an
+Iceberg runtime jar ships with the project):
 
 - ``triples/``  partitioned by ``host_bucket``
 - ``nodes/``    distinct terms w/ kind, partitioned by ``host_bucket``
@@ -50,8 +50,8 @@ def _write_partitioned(
     df: "DataFrame",
     path: str,
     salt_n: int,
+    num_partitions: int,
     mode: str = "overwrite",
-    num_partitions: int | None = None,
 ) -> None:
     # explicit partition count: AQE treats user-specified repartition
     # numbers as final, so the salt split is not coalesced back into
@@ -60,7 +60,7 @@ def _write_partitioned(
         cols = [F.col("host_bucket"), F.pmod(F.hash("url"), F.lit(salt_n))]
     else:
         cols = [F.col("host_bucket")]
-    out = df.repartition(num_partitions, *cols) if num_partitions else df.repartition(*cols)
+    out = df.repartition(num_partitions, *cols)
     (
         out.write.mode(mode)
         .option("partitionOverwriteMode", "dynamic")
@@ -127,23 +127,25 @@ def materialize_wave(
     t0 = time.time()
     triples = triples.persist()
     try:
+        # edges are exactly the non-literal triples (edges_from_triples),
+        # so both counts come from one aggregate
         per_bucket = {
             r["host_bucket"]: r
             for r in triples.groupBy("host_bucket")
-            .agg(F.count("*").alias("n"))
+            .agg(
+                F.count("*").alias("n"),
+                F.count_if(F.col("obj_kind") != "literal").alias("n_edges"),
+            )
             .collect()
         }
-        n_triples = sum(r["n"] for r in per_bucket.values())
         if buckets is None:
             buckets = sorted(per_bucket)
         n_parts = max(1, len(buckets)) * salt_n
-        _write_partitioned(triples, f"{out_dir}/triples", salt_n, mode, n_parts)
+        _write_partitioned(triples, f"{out_dir}/triples", salt_n, n_parts, mode)
         nodes = nodes_from_triples(triples)
-        _write_partitioned(nodes, f"{out_dir}/nodes", salt_n, mode, n_parts)
-        edges = edges_from_triples(triples)
-        _write_partitioned(edges, f"{out_dir}/edges", salt_n, mode, n_parts)
+        _write_partitioned(nodes, f"{out_dir}/nodes", salt_n, n_parts, mode)
+        _write_partitioned(edges_from_triples(triples), f"{out_dir}/edges", salt_n, n_parts, mode)
         n_nodes = {r["host_bucket"]: r["n"] for r in nodes.groupBy("host_bucket").agg(F.count("*").alias("n")).collect()}
-        n_edges = {r["host_bucket"]: r["n"] for r in edges.groupBy("host_bucket").agg(F.count("*").alias("n")).collect()}
     finally:
         triples.unpersist()
     wall = time.time() - t0
@@ -153,7 +155,7 @@ def materialize_wave(
             int(b),
             int(per_bucket[b]["n"]) if b in per_bucket else 0,
             int(n_nodes.get(b, 0)),
-            int(n_edges.get(b, 0)),
+            int(per_bucket[b]["n_edges"]) if b in per_bucket else 0,
             input_fingerprint,
             wall,
             None,
@@ -167,4 +169,3 @@ def materialize_wave(
         .write.mode("append")
         .parquet(f"{out_dir}/_progress")
     )
-    _ = n_triples

@@ -77,13 +77,14 @@ def test_run_pipeline_and_resume(spark, pages, tmp_path):
 
     # ledger counts match table contents per bucket
     progress = spark.read.parquet(f"{out}/_progress")
-    ledger = {r.host_bucket: r.n_triples for r in progress.collect()}
-    actual = {
-        r.host_bucket: r.n
-        for r in triples.groupBy("host_bucket").agg(F.count("*").alias("n")).collect()
-    }
-    for bucket, n in actual.items():
-        assert ledger[bucket] == n
+    ledger = {r.host_bucket: r for r in progress.collect()}
+    for col, table in (("n_triples", triples), ("n_nodes", nodes), ("n_edges", edges)):
+        actual = {
+            r.host_bucket: r.n
+            for r in table.groupBy("host_bucket").agg(F.count("*").alias("n")).collect()
+        }
+        for bucket, row in ledger.items():
+            assert row[col] == actual.get(bucket, 0), (col, bucket)
 
     # resume: second run skips everything
     stats2 = run_pipeline(spark, pages, out, n_buckets=n_buckets, wave_size=4)
@@ -106,6 +107,25 @@ def test_run_pipeline_and_resume(spark, pages, tmp_path):
         map(tuple, spark.read.parquet(f"{out}/triples").drop("host_bucket").collect())
     )
     assert before == after
+
+
+def test_run_pipeline_releases_its_cache(spark, pages, tmp_path):
+    """run_pipeline caches each wave's extraction for that wave only:
+    Spark's storage is the same before and after (the fixture's own
+    pages.cache() counts as already there)."""
+    from microdata_rdf_streaming_parser_js_spark.plans.pipeline import run_pipeline
+
+    def cached():
+        return {
+            r.id(): (r.numCachedPartitions(), r.memSize(), r.diskSize())
+            for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        }
+
+    pages.count()
+    before = cached()
+    stats = run_pipeline(spark, pages, str(tmp_path / "graph"), n_buckets=4, wave_size=2, salt_n=2)
+    assert stats["waves_run"] == 2
+    assert cached() == before
 
 
 def test_streaming_pipeline(spark, pages, tmp_path):
@@ -238,44 +258,3 @@ def test_skew_salting_splits_megahost(spark, pages, tmp_path):
     _write_partitioned(triples, out, salt_n=4, num_partitions=32)
     files = glob.glob(f"{out}/host_bucket={hot.host_bucket}/*.parquet")
     assert len(files) >= 2, files
-
-
-def test_scored_linking_path(spark, pages):
-    from microdata_rdf_streaming_parser_js_spark.operators.canonicalize import (
-        canonicalize_subjects,
-    )
-    from microdata_rdf_streaming_parser_js_spark.operators.extract import (
-        extract_triples,
-    )
-    from microdata_rdf_streaming_parser_js_spark.operators.linking import (
-        link_entities_scored,
-    )
-    from microdata_rdf_streaming_parser_js_spark.operators.skolemize import skolemize
-
-    triples = skolemize(extract_triples(pages)).persist()
-    mapping = link_entities_scored(
-        triples, name_preds=("http://example.org/prop", "http://example.org/prop1")
-    )
-    # functional mapping
-    assert mapping.groupBy("iri").count().filter("count > 1").count() == 0
-    n = triples.count()
-    assert canonicalize_subjects(triples, mapping).count() == n
-    # identical surfaces score 1.0 -> same clusters as frequency path
-    assert mapping.count() > 0
-
-
-def test_build_triples_linker_option(spark, pages):
-    """Both linker paths run end-to-end through build_triples; the
-    scored path must produce a valid triple set (same pages, possibly
-    different canonical picks) and unknown linkers must raise."""
-    from microdata_rdf_streaming_parser_js_spark.plans.pipeline import build_triples
-
-    freq = build_triples(pages, linker="frequency")
-    scored = build_triples(pages, linker="scored")
-    n_freq, n_scored = freq.count(), scored.count()
-    assert n_freq > 0 and n_scored > 0
-    # canonicalization rewrites IRIs 1:1 — triple counts agree across
-    # linkers on this corpus (same dedup key space)
-    assert abs(n_freq - n_scored) <= 0.1 * n_freq
-    with pytest.raises(ValueError, match="unknown linker"):
-        build_triples(pages, linker="neural")
