@@ -4,8 +4,10 @@ Dedup is a single shuffle on the full triple key; AQE coalesces the
 post-shuffle partitions. Canonicalization maps co-referent subject IRIs
 (same canonical entity key) onto one canonical IRI chosen
 deterministically (min), via a mapping table that is broadcast when
-small and sort-merge joined otherwise (Catalyst/AQE decides from stats;
-we hint broadcast below a row threshold).
+small and sort-merge joined otherwise: Spark picks the join from its
+byte threshold (``spark.sql.autoBroadcastJoinThreshold``) on the plan's
+size estimate, and AQE re-plans it from the mapping's real shuffle size
+at run time.
 """
 
 from __future__ import annotations
@@ -32,35 +34,22 @@ def dedup_triples(triples: "DataFrame", per_graph: bool = False) -> "DataFrame":
     return triples.dropDuplicates(key)
 
 
-def canonicalize_subjects(
-    triples: "DataFrame",
-    mapping: "DataFrame",
-    broadcast_threshold: int | None = 10_000_000,
-    mapping_rows: int | None = None,
-) -> "DataFrame":
+def canonicalize_subjects(triples: "DataFrame", mapping: "DataFrame") -> "DataFrame":
     """Rewrite subj/obj IRIs through a (iri -> canonical_iri) mapping.
 
-    ``mapping`` columns: ``iri``, ``canonical_iri``. Small mappings are
-    broadcast (no shuffle of the big triples side); large ones are
-    sort-merge joined (``hint("merge")`` — explicit, so a bad stats
-    estimate can never force a 500M-row mapping into executor memory)
-    with AQE skew splitting.
-
-    The size gate is a capped probe: ``limit(threshold+1).count()``
-    stops scanning once it has threshold+1 rows, so deciding is O(min
-    (|mapping|, threshold)), not a full count. Pass ``mapping_rows``
-    (e.g. from a count the caller already did) to skip the probe job
-    entirely. ``broadcast_threshold=None`` leaves the strategy to
-    Catalyst/AQE stats.
+    ``mapping`` columns: ``iri``, ``canonical_iri``. Building the plan
+    runs no job, except for a mapping Spark cannot size (RDD-backed,
+    e.g. from driver-local rows; Spark would never broadcast it): there
+    a count capped at the byte threshold over Spark's row width stands
+    in for the size.
     """
-    if broadcast_threshold is not None:
-        n = mapping_rows
-        if n is None:
-            n = mapping.limit(broadcast_threshold + 1).count()
-        if n <= broadcast_threshold:
+    conf = mapping.sparkSession._jsparkSession.sessionState().conf()
+    limit = conf.autoBroadcastJoinThreshold()
+    size = int(str(mapping._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    if limit > 0 and size >= conf.defaultSizeInBytes():
+        cap = limit // (8 + mapping._jdf.schema().defaultSize())
+        if mapping.limit(cap + 1).count() <= cap:
             mapping = F.broadcast(mapping)
-        else:
-            mapping = mapping.hint("merge")
     m_subj = mapping.withColumnRenamed("iri", "subj").withColumnRenamed(
         "canonical_iri", "_canon_subj"
     )

@@ -12,12 +12,10 @@ Matching is genuinely imperative (wildcards, $-anchors, longest-match/
 allow-wins tie rule), which is exactly the documented threshold for
 dropping to a Python kernel.
 
-The join strategy is SIZE-GATED, same capped-probe gate as
-``canonicalize_subjects``: a small robots table broadcasts (the page
-side never shuffles), but "one row per host" at Common-Crawl scale is
-~10^8 hosts x KB-scale bodies — tens of GB, an executor OOM if
-broadcast unconditionally — so above the threshold the join is an
-explicit sort-merge on ``_host``.
+The join strategy is Spark's byte threshold plus AQE's runtime re-plan:
+a small robots table broadcasts (the page side never shuffles); "one
+row per host" at Common-Crawl scale (~10^8 hosts x KB-scale bodies,
+tens of GB) is over it and sort-merges on ``_host``.
 """
 
 from __future__ import annotations
@@ -44,21 +42,13 @@ def robots_filter(
     url_col: str = "url",
     host_col: str = "host",
     txt_col: str = "robots_txt",
-    broadcast_threshold: int | None = 1_000_000,
-    robots_rows: int | None = None,
 ) -> "DataFrame":
     """``pages`` plus an ``allowed`` boolean per row: whether ``agent``
     may crawl the URL under its host's robots.txt (hosts with no
     robots row are allowed, per the protocol's missing-file rule).
     Callers filter on it; keeping the column makes the decision
     auditable.
-
-    The size gate is a capped probe (``limit(threshold+1).count()`` —
-    O(min(|robots|, threshold)), not a full count); pass ``robots_rows``
-    from a count the caller already has to skip the probe job, or
-    ``broadcast_threshold=None`` to leave the strategy to Catalyst/AQE
-    stats. The threshold is rows, deliberately lower than
-    canonicalize's: robots rows carry KB-scale bodies, not bare IRIs.
+    Building the plan runs no job (join strategy: module docstring).
     """
     import pandas as pd
 
@@ -68,14 +58,6 @@ def robots_filter(
     robots_kv = robots.select(
         F.col(host_col).alias("_host"), F.col(txt_col).alias("_robots")
     )
-    if broadcast_threshold is not None:
-        n = robots_rows
-        if n is None:
-            n = robots_kv.limit(broadcast_threshold + 1).count()
-        if n <= broadcast_threshold:
-            robots_kv = F.broadcast(robots_kv)
-        else:
-            robots_kv = robots_kv.hint("merge")
     joined = pages.withColumn(
         "_host", F.regexp_extract(F.col(url_col), HOST_PATTERN, 1)
     ).join(robots_kv, "_host", "left")

@@ -17222,7 +17222,7 @@ def q_bootstrap_ci(spark: "SparkSession", sf_dir: str) -> "DataFrame":
         "b",
         F.expr("CASE WHEN sw > 0 THEN swq div sw ELSE 0 END").alias("mean_u"),
     )
-    wr = Window.orderBy(F.col("mean_u").asc(), F.col("b").asc())
+    wr = Window.orderBy(F.col("mean_u").asc_nulls_last(), F.col("b").asc())
     ranked = rep.withColumn("r", F.row_number().over(wr))
     stats = ranked.agg(
         F.sum(F.when(F.col("r") == 2, F.col("mean_u"))).cast("long").alias("boot_lo_u"),
@@ -17275,7 +17275,7 @@ rep AS (
 ),
 ranked AS (
   SELECT b, mean_u,
-         ROW_NUMBER() OVER (ORDER BY mean_u ASC, b ASC) AS r
+         ROW_NUMBER() OVER (ORDER BY mean_u ASC NULLS LAST, b ASC) AS r
   FROM rep
 ),
 stats AS (

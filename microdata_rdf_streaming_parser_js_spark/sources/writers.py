@@ -11,6 +11,11 @@ Iceberg runtime jar ships with the project):
 - ``_progress/``  one row per completed host_bucket: counts, timing,
   input fingerprint — the resume ledger and lineage record.
 
+A wave's jobs are one aggregate (all three ledger counts), the three
+table writes and the ledger append; the canonicalize join upstream runs
+none at plan time (Spark's byte threshold plus AQE's runtime re-plan
+pick its strategy).
+
 Idempotence: partition-overwrite (dynamic) per host_bucket, so a retry
 of an unfinished wave rewrites exactly its buckets; ``_progress`` is
 appended only after the wave's data commit.
@@ -87,17 +92,23 @@ def edges_from_triples(triples: "DataFrame") -> "DataFrame":
 
 
 def completed_buckets(spark: "SparkSession", out_dir: str) -> set[int]:
-    """Read the resume ledger; empty set when no checkpoint exists."""
-    try:
-        rows = (
-            spark.read.schema(PROGRESS_SCHEMA)
-            .parquet(f"{out_dir}/_progress")
-            .select("host_bucket")
-            .distinct()
-            .collect()
-        )
-    except Exception:  # noqa: BLE001 - first run: ledger absent
+    """Read the resume ledger; empty set when ``_progress`` is absent or
+    holds no data file (asked of the path's Hadoop FileSystem, so any
+    scheme). Other read errors raise rather than re-run every bucket."""
+    jvm = spark.sparkContext._jvm
+    path = jvm.org.apache.hadoop.fs.Path(f"{out_dir}/_progress")
+    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if not fs.exists(path) or not any(
+        not st.getPath().getName().startswith(("_", ".")) for st in fs.listStatus(path)
+    ):
         return set()
+    rows = (
+        spark.read.schema(PROGRESS_SCHEMA)
+        .parquet(f"{out_dir}/_progress")
+        .select("host_bucket")
+        .distinct()
+        .collect()
+    )
     return {r.host_bucket for r in rows}
 
 
@@ -127,14 +138,21 @@ def materialize_wave(
     t0 = time.time()
     triples = triples.persist()
     try:
-        # edges are exactly the non-literal triples (edges_from_triples),
-        # so both counts come from one aggregate
+        # one aggregate for all three counts: each triple gives its
+        # subject (pos 0) and non-literal object (pos 1, else null)
+        terms = triples.select(
+            "host_bucket",
+            F.posexplode(
+                F.array("subj", F.when(F.col("obj_kind") != "literal", F.col("obj")))
+            ).alias("pos", "term"),
+        )
         per_bucket = {
-            r["host_bucket"]: r
-            for r in triples.groupBy("host_bucket")
+            r["host_bucket"]: (r["n_triples"], r["n_nodes"], r["n_edges"])
+            for r in terms.groupBy("host_bucket")
             .agg(
-                F.count("*").alias("n"),
-                F.count_if(F.col("obj_kind") != "literal").alias("n_edges"),
+                F.count_if(F.col("pos") == 0).alias("n_triples"),
+                F.count_distinct("term").alias("n_nodes"),
+                F.count_if((F.col("pos") == 1) & F.col("term").isNotNull()).alias("n_edges"),
             )
             .collect()
         }
@@ -142,10 +160,8 @@ def materialize_wave(
             buckets = sorted(per_bucket)
         n_parts = max(1, len(buckets)) * salt_n
         _write_partitioned(triples, f"{out_dir}/triples", salt_n, n_parts, mode)
-        nodes = nodes_from_triples(triples)
-        _write_partitioned(nodes, f"{out_dir}/nodes", salt_n, n_parts, mode)
+        _write_partitioned(nodes_from_triples(triples), f"{out_dir}/nodes", salt_n, n_parts, mode)
         _write_partitioned(edges_from_triples(triples), f"{out_dir}/edges", salt_n, n_parts, mode)
-        n_nodes = {r["host_bucket"]: r["n"] for r in nodes.groupBy("host_bucket").agg(F.count("*").alias("n")).collect()}
     finally:
         triples.unpersist()
     wall = time.time() - t0
@@ -153,9 +169,7 @@ def materialize_wave(
     rows = [
         (
             int(b),
-            int(per_bucket[b]["n"]) if b in per_bucket else 0,
-            int(n_nodes.get(b, 0)),
-            int(per_bucket[b]["n_edges"]) if b in per_bucket else 0,
+            *per_bucket.get(b, (0, 0, 0)),
             input_fingerprint,
             wall,
             None,

@@ -109,6 +109,27 @@ def test_run_pipeline_and_resume(spark, pages, tmp_path):
     assert before == after
 
 
+def test_completed_buckets_reads_absent_empty_and_broken_ledgers(spark, tmp_path):
+    """An absent or empty ``_progress`` means nothing is done; a ledger
+    file that cannot be read raises instead of re-running every bucket."""
+    from py4j.protocol import Py4JError
+    from pyspark.errors import PySparkException
+
+    from microdata_rdf_streaming_parser_js_spark.sources.writers import (
+        completed_buckets,
+    )
+
+    out = tmp_path / "graph"
+    assert completed_buckets(spark, str(out)) == set()
+    ledger = out / "_progress"
+    ledger.mkdir(parents=True)
+    (ledger / "_SUCCESS").write_bytes(b"")
+    assert completed_buckets(spark, str(out)) == set()
+    (ledger / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises((Py4JError, PySparkException)):
+        completed_buckets(spark, str(out))
+
+
 def test_run_pipeline_releases_its_cache(spark, pages, tmp_path):
     """run_pipeline caches each wave's extraction for that wave only:
     Spark's storage is the same before and after (the fixture's own
