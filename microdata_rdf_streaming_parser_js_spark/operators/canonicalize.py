@@ -38,18 +38,9 @@ def canonicalize_subjects(triples: "DataFrame", mapping: "DataFrame") -> "DataFr
     """Rewrite subj/obj IRIs through a (iri -> canonical_iri) mapping.
 
     ``mapping`` columns: ``iri``, ``canonical_iri``. Building the plan
-    runs no job, except for a mapping Spark cannot size (RDD-backed,
-    e.g. from driver-local rows; Spark would never broadcast it): there
-    a count capped at the byte threshold over Spark's row width stands
-    in for the size.
+    runs no job; a mapping Spark cannot size (RDD-backed) plans
+    sort-merge and AQE broadcasts it from its runtime size.
     """
-    conf = mapping.sparkSession._jsparkSession.sessionState().conf()
-    limit = conf.autoBroadcastJoinThreshold()
-    size = int(str(mapping._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-    if limit > 0 and size >= conf.defaultSizeInBytes():
-        cap = limit // (8 + mapping._jdf.schema().defaultSize())
-        if mapping.limit(cap + 1).count() <= cap:
-            mapping = F.broadcast(mapping)
     m_subj = mapping.withColumnRenamed("iri", "subj").withColumnRenamed(
         "canonical_iri", "_canon_subj"
     )

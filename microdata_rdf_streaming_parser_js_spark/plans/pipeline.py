@@ -1,8 +1,11 @@
 """End-to-end KG-construction plan (north_rule pipeline):
 
   pages -> host-bucket -> [resume filter] -> extract (mapInPandas)
-        -> skolemize -> entity-link -> canonicalize -> dedup
+        -> skolemize -> entity-link -> canonicalize
         -> materialize nodes/edges/triples + _progress checkpoints
+
+Distinct graph rows are the writer's rule: ``materialize_wave`` drops
+repeated (url, triple) rows in the one shuffle that lays the wave out.
 
 The only Python crossing is extraction (Arrow); every other stage is
 JVM column expressions / shuffles. Buckets are processed in waves so a
@@ -27,17 +30,17 @@ if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
 
 
-def link_and_dedup(triples: "DataFrame") -> "DataFrame":
-    """Lazy plan skolemized triples -> canonical triples: the entity-link
-    mapping is built from ``triples`` and joined back onto them, so the
-    input is read twice; persist it first to extract each page once."""
-    mapping = link_entities(triples)
-    return dedup_triples(canonicalize_subjects(triples, mapping), per_graph=True)
+def link_and_canonicalize(triples: "DataFrame") -> "DataFrame":
+    """Lazy plan skolemized -> canonical (not deduped) triples: the
+    entity-link mapping is built from ``triples`` and joined back onto
+    them, so the input is read twice; persist it to extract once."""
+    return canonicalize_subjects(triples, link_entities(triples))
 
 
 def build_triples(pages: "DataFrame", vocab_registry: dict | None = None) -> "DataFrame":
-    """Logical plan pages -> canonical triples (no writes, no cache)."""
-    return link_and_dedup(skolemize(extract_triples(pages, vocab_registry)))
+    """Logical plan pages -> distinct canonical triples (no writes, no cache)."""
+    canonical = link_and_canonicalize(skolemize(extract_triples(pages, vocab_registry)))
+    return dedup_triples(canonical, per_graph=True)
 
 
 def run_pipeline(
@@ -71,7 +74,7 @@ def run_pipeline(
         try:
             materialize_wave(
                 spark,
-                with_host_bucket(link_and_dedup(extracted), n_buckets),
+                with_host_bucket(link_and_canonicalize(extracted), n_buckets),
                 out_dir,
                 wave,
                 salt_n=salt_n,

@@ -11,19 +11,20 @@ Iceberg runtime jar ships with the project):
 - ``_progress/``  one row per completed host_bucket: counts, timing,
   input fingerprint — the resume ledger and lineage record.
 
-A wave's jobs are one aggregate (all three ledger counts), the three
-table writes and the ledger append; the canonicalize join upstream runs
-none at plan time (Spark's byte threshold plus AQE's runtime re-plan
-pick its strategy).
+Each wave is laid out once (``wave_layout``): one shuffle on
+(host_bucket, pmod(hash(url), salt_n)) that also drops repeated (url,
+triple) rows, so distinct graph rows are the writer's rule and a
+mega-host bucket is written by up to ``salt_n`` tasks. A wave's jobs:
+one aggregate for the ledger counts (it fills the layout's cache), the
+triples and edges writes from that cache, the nodes write (one shuffle,
+salted on ``iri``, deduped in it) and a one-file ledger append. Both
+shuffles take ``spark.sql.shuffle.partitions`` partitions (2x cores
+locally, see ``session.get_spark``; cluster jobs size it), passed
+explicitly so AQE keeps the salt split.
 
 Idempotence: partition-overwrite (dynamic) per host_bucket, so a retry
 of an unfinished wave rewrites exactly its buckets; ``_progress`` is
 appended only after the wave's data commit.
-
-Skew: a mega-host concentrates rows in one ``host_bucket``; writes
-repartition on (host_bucket, salt) with ``salt = pmod(hash(url),
-salt_n)`` so each bucket is written by ``salt_n`` parallel tasks
-instead of one.
 """
 
 from __future__ import annotations
@@ -31,7 +32,10 @@ from __future__ import annotations
 import time
 from typing import TYPE_CHECKING
 
+import pandas as pd
 from pyspark.sql import functions as F
+
+from ..operators.canonicalize import TRIPLE_KEY
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
@@ -40,6 +44,7 @@ PROGRESS_SCHEMA = (
     "host_bucket int, n_triples long, n_nodes long, n_edges long, "
     "input_fingerprint string, wall_sec double, completed_at timestamp, run_id string"
 )
+PROGRESS_COLUMNS = [f.split()[0] for f in PROGRESS_SCHEMA.split(", ")]
 
 
 def with_host_bucket(df: "DataFrame", n_buckets: int = 64) -> "DataFrame":
@@ -51,43 +56,58 @@ def with_host_bucket(df: "DataFrame", n_buckets: int = 64) -> "DataFrame":
     )
 
 
-def _write_partitioned(
-    df: "DataFrame",
-    path: str,
-    salt_n: int,
-    num_partitions: int,
-    mode: str = "overwrite",
-) -> None:
-    # explicit partition count: AQE treats user-specified repartition
-    # numbers as final, so the salt split is not coalesced back into
-    # one writer task per (possibly mega-) host bucket
-    if "url" in df.columns:
-        cols = [F.col("host_bucket"), F.pmod(F.hash("url"), F.lit(salt_n))]
-    else:
-        cols = [F.col("host_bucket")]
-    out = df.repartition(num_partitions, *cols)
-    (
-        out.write.mode(mode)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("host_bucket")
-        .parquet(path)
+def _salted(df: "DataFrame", salt_on: str, keys: list[str], salt_n: int) -> "DataFrame":
+    """``df`` hash-partitioned on (host_bucket, pmod(hash(salt_on), salt_n))
+    with duplicates over ``keys`` dropped in that same shuffle (the keys
+    hold every partitioning column, so Spark plans no second exchange)."""
+    n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return (
+        df.withColumn("_salt", F.pmod(F.hash(salt_on), F.lit(salt_n)))
+        .repartition(n_parts, "host_bucket", "_salt")
+        .dropDuplicates(["host_bucket", "_salt", *keys])
+        .drop("_salt")
     )
+
+
+def wave_layout(triples: "DataFrame", salt_n: int) -> "DataFrame":
+    """Distinct (url, triple) rows salted on url: the triples/edges layout."""
+    return _salted(triples, "url", ["url", *TRIPLE_KEY], salt_n)
+
+
+def _terms(triples: "DataFrame") -> "DataFrame":
+    """Each triple's graph terms: its subject (pos 0) and its object
+    (pos 1; a null ``iri`` for a literal)."""
+    return triples.select(
+        "host_bucket",
+        "obj_kind",
+        F.posexplode(
+            F.array("subj", F.when(F.col("obj_kind") != "literal", F.col("obj")))
+        ).alias("pos", "iri"),
+    )
+
+
+def _node_terms(triples: "DataFrame") -> "DataFrame":
+    kind = F.when(F.col("pos") == 0, "iri").otherwise(F.col("obj_kind")).alias("kind")
+    return _terms(triples).filter(F.col("iri").isNotNull()).select("host_bucket", "iri", kind)
 
 
 def nodes_from_triples(triples: "DataFrame") -> "DataFrame":
     """Distinct graph nodes (subjects + non-literal objects)."""
-    subs = triples.select(
-        "host_bucket", F.col("subj").alias("iri"), F.lit("iri").alias("kind")
-    )
-    objs = triples.filter(F.col("obj_kind") != "literal").select(
-        "host_bucket", F.col("obj").alias("iri"), F.col("obj_kind").alias("kind")
-    )
-    return subs.unionByName(objs).dropDuplicates(["host_bucket", "iri"])
+    return _node_terms(triples).dropDuplicates(["host_bucket", "iri"])
 
 
 def edges_from_triples(triples: "DataFrame") -> "DataFrame":
     return triples.filter(F.col("obj_kind") != "literal").select(
         "host_bucket", "subj", "pred", "obj", "url"
+    )
+
+
+def _write(df: "DataFrame", path: str, mode: str) -> None:
+    (
+        df.write.mode(mode)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("host_bucket")
+        .parquet(path)
     )
 
 
@@ -125,61 +145,46 @@ def materialize_wave(
     """Write one wave of host buckets + commit its checkpoint rows.
 
     ``triples`` must already carry host_bucket and be filtered to
-    ``buckets``. The data write happens first; the _progress append is
-    the commit point (a crash in between re-does the wave
-    idempotently via dynamic partition overwrite).
+    ``buckets``; repeated (url, triple) rows are dropped here. The data
+    write happens first; the _progress append is the commit point (a
+    crash in between re-does the wave idempotently via dynamic
+    partition overwrite).
 
-    ``buckets=None`` derives the bucket list from the per-bucket
-    counts this function computes anyway over the PERSISTED frame —
-    the streaming foreachBatch path uses this so each micro-batch is
-    read exactly once (a caller-side ``distinct().collect()`` would
-    re-scan the un-persisted batch).
+    ``buckets=None`` takes the bucket list from the per-bucket counts
+    this function computes anyway over the cached layout — the
+    streaming foreachBatch path uses this so each micro-batch is read
+    exactly once.
     """
     t0 = time.time()
-    triples = triples.persist()
+    layout = wave_layout(triples, salt_n).persist()
     try:
-        # one aggregate for all three counts: each triple gives its
-        # subject (pos 0) and non-literal object (pos 1, else null)
-        terms = triples.select(
-            "host_bucket",
-            F.posexplode(
-                F.array("subj", F.when(F.col("obj_kind") != "literal", F.col("obj")))
-            ).alias("pos", "term"),
-        )
         per_bucket = {
             r["host_bucket"]: (r["n_triples"], r["n_nodes"], r["n_edges"])
-            for r in terms.groupBy("host_bucket")
+            for r in _terms(layout)
+            .groupBy("host_bucket")
             .agg(
                 F.count_if(F.col("pos") == 0).alias("n_triples"),
-                F.count_distinct("term").alias("n_nodes"),
-                F.count_if((F.col("pos") == 1) & F.col("term").isNotNull()).alias("n_edges"),
+                F.count_distinct("iri").alias("n_nodes"),
+                F.count_if((F.col("pos") == 1) & F.col("iri").isNotNull()).alias("n_edges"),
             )
             .collect()
         }
-        if buckets is None:
-            buckets = sorted(per_bucket)
-        n_parts = max(1, len(buckets)) * salt_n
-        _write_partitioned(triples, f"{out_dir}/triples", salt_n, n_parts, mode)
-        _write_partitioned(nodes_from_triples(triples), f"{out_dir}/nodes", salt_n, n_parts, mode)
-        _write_partitioned(edges_from_triples(triples), f"{out_dir}/edges", salt_n, n_parts, mode)
+        _write(layout, f"{out_dir}/triples", mode)
+        _write(edges_from_triples(layout), f"{out_dir}/edges", mode)
+        _write(_salted(_node_terms(layout), "iri", ["iri"], salt_n), f"{out_dir}/nodes", mode)
     finally:
-        triples.unpersist()
+        layout.unpersist()
+    if buckets is None:
+        buckets = sorted(per_bucket)
     wall = time.time() - t0
-    now = F.current_timestamp()
     rows = [
-        (
-            int(b),
-            *per_bucket.get(b, (0, 0, 0)),
-            input_fingerprint,
-            wall,
-            None,
-            run_id,
-        )
+        (int(b), *per_bucket.get(b, (0, 0, 0)), input_fingerprint, wall, None, run_id)
         for b in buckets
     ]
     (
-        spark.createDataFrame(rows, schema=PROGRESS_SCHEMA)
-        .withColumn("completed_at", now)
+        spark.createDataFrame(pd.DataFrame(rows, columns=PROGRESS_COLUMNS), schema=PROGRESS_SCHEMA)
+        .withColumn("completed_at", F.current_timestamp())
+        .coalesce(1)
         .write.mode("append")
         .parquet(f"{out_dir}/_progress")
     )

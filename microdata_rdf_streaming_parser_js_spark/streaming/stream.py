@@ -4,9 +4,9 @@ The reference is a *streaming* parser (Node Transform); the Spark
 analogue of its continuous operation is a Structured Streaming job:
 ``readStream`` over an arriving pages feed -> the same
 ``mapInPandas`` extraction (mapInPandas works on streaming DataFrames)
--> skolemize -> ``foreachBatch`` materialization with the same
-host-bucket layout, checkpointed by Spark's streaming checkpoint +
-our _progress ledger per micro-batch.
+-> skolemize -> ``foreachBatch`` into the batch writer (whose rule is
+distinct (url, triple) graph rows), checkpointed by Spark's streaming
+checkpoint + our _progress ledger per micro-batch.
 """
 
 from __future__ import annotations
@@ -57,8 +57,8 @@ def start_pipeline_stream(
     def write_batch(batch_df: "DataFrame", batch_id: int) -> None:
         b = with_host_bucket(batch_df, n_buckets)
         # buckets=None: the writer derives the bucket list from the
-        # per-bucket counts it computes over the persisted batch — one
-        # read of each micro-batch, not two (round-4 review item)
+        # per-bucket counts it computes over its cached layout — one
+        # read of each micro-batch, not two
         materialize_wave(
             spark, b, out_dir, buckets=None, salt_n=salt_n,
             input_fingerprint=f"stream-batch-{batch_id}", run_id=f"batch{batch_id}",

@@ -53,6 +53,8 @@ def test_skolemization_stable_and_complete(spark, pages):
 
 
 def test_run_pipeline_and_resume(spark, pages, tmp_path):
+    import glob
+
     from microdata_rdf_streaming_parser_js_spark.plans.pipeline import run_pipeline
     from microdata_rdf_streaming_parser_js_spark.sources.writers import (
         completed_buckets,
@@ -66,6 +68,8 @@ def test_run_pipeline_and_resume(spark, pages, tmp_path):
     )
     assert stats["waves_run"] == 2
     assert completed_buckets(spark, out) == set(range(n_buckets))
+    # one ledger file per wave, so no ledger file spans two waves
+    assert len(glob.glob(f"{out}/_progress/part-*.parquet")) == stats["waves_run"]
 
     triples = spark.read.parquet(f"{out}/triples")
     nodes = spark.read.parquet(f"{out}/nodes")
@@ -170,13 +174,18 @@ def test_streaming_pipeline(spark, pages, tmp_path):
     triples = spark.read.parquet(f"{out}/triples")
     assert triples.count() > 0
 
-    # streaming output == batch output (same extraction + skolemize)
+    # streaming output == batch output (same extraction + skolemize,
+    # distinct (url, triple) rows: the writer's rule; a page's triples
+    # all arrive in one micro-batch)
+    from microdata_rdf_streaming_parser_js_spark.operators.canonicalize import (
+        dedup_triples,
+    )
     from microdata_rdf_streaming_parser_js_spark.operators.extract import (
         extract_triples,
     )
     from microdata_rdf_streaming_parser_js_spark.operators.skolemize import skolemize
 
-    batch = skolemize(extract_triples(pages))
+    batch = dedup_triples(skolemize(extract_triples(pages)), per_graph=True)
     a = sorted(map(tuple, triples.select(batch.columns).collect()))
     b = sorted(map(tuple, batch.collect()))
     assert a == b
@@ -256,15 +265,16 @@ def test_streaming_first_seen_dedup(spark, pages, tmp_path):
 
 
 def test_skew_salting_splits_megahost(spark, pages, tmp_path):
-    """The Zipf corpus concentrates pages on host0; salted writes must
-    spread that bucket across salt_n files instead of one."""
+    """The Zipf corpus concentrates pages on host0; the wave's salted
+    layout must spread that bucket across several files in every
+    table, nodes included, instead of one."""
     import glob
 
     from microdata_rdf_streaming_parser_js_spark.operators.extract import (
         extract_triples,
     )
     from microdata_rdf_streaming_parser_js_spark.sources.writers import (
-        _write_partitioned,
+        materialize_wave,
         with_host_bucket,
     )
 
@@ -276,6 +286,7 @@ def test_skew_salting_splits_megahost(spark, pages, tmp_path):
         .first()
     )
     out = str(tmp_path / "salted")
-    _write_partitioned(triples, out, salt_n=4, num_partitions=32)
-    files = glob.glob(f"{out}/host_bucket={hot.host_bucket}/*.parquet")
-    assert len(files) >= 2, files
+    materialize_wave(spark, triples, out, buckets=None, salt_n=4)
+    for table in ("triples", "edges", "nodes"):
+        files = glob.glob(f"{out}/{table}/host_bucket={hot.host_bucket}/*.parquet")
+        assert len(files) >= 2, (table, files)

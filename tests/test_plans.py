@@ -86,8 +86,14 @@ def test_canonicalize_broadcasts_mapping(spark, pages_parquet):
     mapping = spark.createDataFrame(
         [("http://a.example/x", "http://a.example/y")], "iri string, canonical_iri string"
     )
-    plan = plan_str(canonicalize_subjects(triples, mapping))
-    assert "BroadcastHashJoin" in plan
+    out = canonicalize_subjects(triples, mapping)
+    # Spark cannot size this RDD-backed mapping, so the static plan
+    # sort-merges; AQE broadcasts it from its runtime size. Collecting
+    # runs the frame's own adaptive plan, which explain then shows final.
+    out.collect()
+    final = plan_str(out).split("== Initial Plan ==")[0]
+    assert "== Final Plan ==" in final
+    assert "BroadcastHashJoin" in final
 
 
 @contextmanager
@@ -142,7 +148,7 @@ def test_building_link_and_robots_plans_runs_no_job(spark, pages_parquet):
         extract_triples,
     )
     from microdata_rdf_streaming_parser_js_spark.operators.skolemize import skolemize
-    from microdata_rdf_streaming_parser_js_spark.plans.pipeline import link_and_dedup
+    from microdata_rdf_streaming_parser_js_spark.plans.pipeline import link_and_canonicalize
 
     triples = skolemize(extract_triples(spark.read.parquet(pages_parquet)))
     pages = spark.createDataFrame([("http://h0.example.org/a",)], "url string")
@@ -154,7 +160,7 @@ def test_building_link_and_robots_plans_runs_no_job(spark, pages_parquet):
     group = f"plan-build-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "build plans only")
     try:
-        link_and_dedup(triples)
+        link_and_canonicalize(triples)
         robots_filter(pages, robots)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -213,28 +219,23 @@ def test_lsh_and_ivf_have_no_python_eval(spark, sf_dir):
 
 
 def test_salted_write_repartition_survives_aqe(spark, pages_parquet):
-    """The writer's salted repartition (writers._write_partitioned
-    shape) must be a user-specified exchange — AQE only coalesces
-    non-user-specified ones, so the salt split per (possibly mega-)
-    host bucket survives."""
-    from pyspark.sql import functions as F
-
+    """The writer's salted layout (writers.wave_layout) must be a
+    user-specified exchange — AQE only coalesces non-user-specified
+    ones, so the salt split per (possibly mega-) host bucket survives —
+    and its only shuffle: the (url, triple) dedup keys hold every
+    partitioning column, so the dedup runs inside that Exchange."""
     from microdata_rdf_streaming_parser_js_spark.operators.extract import (
         extract_triples,
     )
     from microdata_rdf_streaming_parser_js_spark.sources.writers import (
+        wave_layout,
         with_host_bucket,
     )
 
-    triples = with_host_bucket(
-        extract_triples(spark.read.parquet(pages_parquet)), 8
-    )
-    salted = triples.repartition(
-        32, F.col("host_bucket"), F.pmod(F.hash("url"), F.lit(4))
-    )
-    plan = plan_str(salted)
-    assert "Exchange" in plan
+    triples = with_host_bucket(extract_triples(spark.read.parquet(pages_parquet)), 8)
+    plan = plan_str(wave_layout(triples, salt_n=4))
     assert "REPARTITION_BY_NUM" in plan
+    assert len(_shuffle_nodes(plan)) == 1, plan
 
 
 def test_split_assign_is_pure_scan_projection(spark, sf_dir):
