@@ -959,4 +959,3 @@ _add(
 )
 
 FIXTURES: tuple[Fixture, ...] = tuple(_F)
-FIXTURES_BY_NAME = {f.name: f for f in FIXTURES}

@@ -105,18 +105,13 @@ def extract_main_content(
     field is None and ``error`` carries 'Type: message' (the same
     quarantine contract as extraction).
     """
-    if isinstance(html, (bytes, bytearray, memoryview)):
-        from .charset import decode_html
+    from .charset import decode_html
+    from .microdata import feed_document
 
-        html = decode_html(bytes(html))
+    html = decode_html(html)  # decode errors raise; parse errors quarantine
     try:
-        from .fast_html import FastHtmlTokenizer
-
         listener = _BlockListener()
-        tokenizer = FastHtmlTokenizer(listener)
-        tokenizer.feed(html)
-        tokenizer.end()
-        listener.on_end()
+        feed_document(html, listener)  # the tokenizer's end() calls on_end()
         kept = [
             text
             for (text, n, anchor) in listener.blocks

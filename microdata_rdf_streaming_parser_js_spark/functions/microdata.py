@@ -367,6 +367,25 @@ class MicrodataExtractor:
 
 
 # ----------------------------------------------------------------------
+def feed_document(html, sink, xml_mode: bool = False) -> None:
+    """Decode one document (``decode_html``: bytes-like -> str; str
+    and None pass through) and stream its tag events into ``sink``."""
+    from .charset import decode_html
+
+    if xml_mode:
+        from .html_events import XmlTagEventParser
+
+        tokenizer = XmlTagEventParser(sink)
+    else:
+        # fast regex scanner; event-stream parity with the stdlib-backed
+        # HtmlTagEventParser is enforced by tests/test_fast_html.py
+        from .fast_html import FastHtmlTokenizer
+
+        tokenizer = FastHtmlTokenizer(sink)
+    tokenizer.feed(decode_html(html))
+    tokenizer.end()
+
+
 def parse_html(
     html: str | bytes,
     base_iri: str = "",
@@ -378,23 +397,8 @@ def parse_html(
     Equivalent to piping the document through the reference parser with
     ``{baseIRI: base_iri, vocabRegistry: vocab_registry, xmlMode}``.
     """
-    if isinstance(html, (bytes, bytearray)):
-        from .charset import decode_html
-
-        html = decode_html(bytes(html))
     extractor = MicrodataExtractor(base_iri, vocab_registry)
-    if xml_mode:
-        from .html_events import XmlTagEventParser
-
-        tokenizer = XmlTagEventParser(extractor)
-    else:
-        # fast regex scanner; event-stream parity with the stdlib-backed
-        # HtmlTagEventParser is enforced by tests/test_fast_html.py
-        from .fast_html import FastHtmlTokenizer
-
-        tokenizer = FastHtmlTokenizer(extractor)
-    tokenizer.feed(html)
-    tokenizer.end()
+    feed_document(html, extractor, xml_mode)
     return extractor.triples
 
 
@@ -420,19 +424,6 @@ class _TextSink:
 def extract_text(html: str | bytes, xml_mode: bool = False) -> str:
     """Concatenation of all text events in document order — the
     byte-identity invariant column (`text`) of the pages table."""
-    if isinstance(html, (bytes, bytearray)):
-        from .charset import decode_html
-
-        html = decode_html(bytes(html))
     sink = _TextSink()
-    if xml_mode:
-        from .html_events import XmlTagEventParser
-
-        tokenizer = XmlTagEventParser(sink)
-    else:
-        from .fast_html import FastHtmlTokenizer
-
-        tokenizer = FastHtmlTokenizer(sink)
-    tokenizer.feed(html)
-    tokenizer.end()
+    feed_document(html, sink, xml_mode)
     return "".join(sink.parts)

@@ -79,13 +79,6 @@ def quality_score_u(col: "Column") -> "Column":
     return F.floor(_quality_raw(col) * 1e6).cast("long")
 
 
-def quality_score(col: "Column") -> "Column":
-    """Composite quality in [0,1]: length band + alpha ratio +
-    stopword presence - punctuation excess. Deterministic arithmetic
-    (rounded to 6 dp) so oracles match bit-for-bit."""
-    return F.round(_quality_raw(col), 6)
-
-
 def _quality_raw(col: "Column") -> "Column":
     n_chars = F.length(col)
     n_alpha = _count_matches(col, r"[A-Za-z]")

@@ -1186,10 +1186,10 @@ def nfc_dedup(
     embarrassingly parallel, column-pruned, zero shuffle; the only
     exchange is the map-side-combined digest groupBy.
     """
-    import pandas as pd
     from pyspark.sql import types as T
 
     from ..functions.text import nfc_digest
+    from .rows import map_rows
 
     schema = T.StructType(
         [
@@ -1198,18 +1198,11 @@ def nfc_dedup(
         ]
     )
 
-    def fn(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "digest": [nfc_digest(t) for t in pdf[text_col]],
-                }
-            )
-
     return (
-        docs.select(id_col, text_col)
-        .mapInPandas(fn, schema=schema)
+        map_rows(
+            docs, [id_col, text_col],
+            lambda doc_id, text: [(int(doc_id), nfc_digest(text))], schema,
+        )
         .groupBy("digest")
         .agg(
             F.min("doc_id").alias("canonical_doc_id"),

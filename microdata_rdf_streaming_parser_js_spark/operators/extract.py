@@ -1,36 +1,33 @@
 """D2 — distributed triple extraction (pages -> triples DataFrame).
 
 The whole per-page Microdata algorithm (reference operators P1-P14,
-SURVEY.md §2.2) runs inside ONE Arrow-vectorized ``mapInPandas`` UDF:
-the HTML event stream never crosses a Spark boundary. Spark sees a
-declarative plan — scan(url, html) -> mapInPandas -> triples — so
-Catalyst prunes the other page columns out of the parquet/Iceberg scan.
+SURVEY.md §2.2) runs inside ONE per-page kernel that crosses Arrow
+through ``operators/rows.map_rows`` (scale notes there): the HTML event
+stream never crosses a Spark boundary. Spark sees a declarative plan —
+scan(url, html) -> mapInPandas -> triples — so Catalyst prunes the
+other page columns out of the parquet/Iceberg scan.
 
-Scale notes (100 TB corpus):
-- ``mapInPandas`` (iterator-of-batches) is used instead of a scalar
-  pandas_udf so each Python worker compiles regexes/parser tables once
-  per task, not per batch, and so output rows (tens per page) stream
-  out batch-by-batch without materializing a whole partition.
-- Extraction is embarrassingly parallel: no shuffle is introduced
-  here. Upstream repartition by hash(url) (sources/pages.read_pages)
-  evens out crawl-order skew in page sizes.
-- Parse failures never kill a task: errors land in an ``error``
-  column (null on success) so one hostile page in a 100 TB crawl
-  costs one row, not a stage retry.
+Parse failures never kill a task: errors land in an ``error`` column
+(null on success) so one hostile page in a 100 TB crawl costs one row,
+not a stage retry.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
 from pyspark.sql import types as T
 
 from ..functions.charset import decode_html, sniff_charset
-from ..functions.microdata import MicrodataExtractor, parse_html
+from ..functions.microdata import (
+    MicrodataExtractor,
+    extract_text,
+    feed_document,
+    parse_html,
+)
+from .rows import map_rows, rows_fn
 
 if TYPE_CHECKING:
-    import pandas as pd
     from pyspark.sql import DataFrame
 
 TRIPLES_SCHEMA = T.StructType(
@@ -54,99 +51,38 @@ TRIPLE_COLS = [f.name for f in TRIPLES_SCHEMA.fields]
 MAX_HTML_BYTES = 16 * 1024 * 1024
 
 
-def _extract_page(base_iri: str, html, vocab_registry, xml_mode: bool,
-                  max_html_bytes: int = MAX_HTML_BYTES):
-    """Parse one page with the given base IRI; returns triples."""
-    if html is None:
-        raise ValueError("null html")
-    if isinstance(html, (bytes, bytearray, memoryview)):
-        if len(html) > max_html_bytes:
-            raise ValueError(f"html too large: {len(html)} bytes")
-        # charset sniff (BOM -> meta prescan -> UTF-8 fallback): the
-        # reference consumes already-decoded strings, so the decode
-        # contract is OURS (functions/charset.py; SURVEY §2.1 S1)
-        html = decode_html(bytes(html))
-    elif len(html) > max_html_bytes:
-        raise ValueError(f"html too large: {len(html)} chars")
-    return parse_html(html, base_iri or "", vocab_registry, xml_mode)
+def _extract_page(url: str, html, *base_iri) -> list[tuple]:
+    """One page's TRIPLES_SCHEMA rows, or one quarantine row carrying
+    the error. The parser base is the ``base_iri`` column when the pages
+    have one (the reference's ``baseIRI`` option is independent of
+    stream identity; a null base parses with base ``""``), else ``url``."""
+    try:
+        if html is None:
+            raise ValueError("null html")
+        if len(html) > MAX_HTML_BYTES:
+            unit = "chars" if isinstance(html, str) else "bytes"
+            raise ValueError(f"html too large: {len(html)} {unit}")
+        triples = parse_html(html, (base_iri[0] if base_iri else url) or "")
+    except Exception as exc:  # noqa: BLE001 - quarantine bad pages
+        return [(url, None, None, None, None, None, None,
+                 f"{type(exc).__name__}: {exc}")]
+    return [(url, *t, None) for t in triples]
 
 
-def make_extract_fn(vocab_registry: dict | None = None, xml_mode: bool = False):
-    """Build the mapInPandas function (registry captured in the closure;
-    shipped once per executor like a broadcast variable).
+def extract_triples(pages: "DataFrame", keep_errors: bool = False) -> "DataFrame":
+    """pages(url, html[, base_iri], ...) -> triples DataFrame.
 
-    If the incoming batch has a ``base_iri`` column it overrides the
-    parser base (mirrors the reference's ``baseIRI`` option being
-    independent of stream identity); otherwise ``url`` is the base.
-    """
-    import pandas as pd
-
-    def extract_fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out = {c: [] for c in TRIPLE_COLS}
-            bases = pdf["base_iri"] if "base_iri" in pdf.columns else pdf["url"]
-            for url, base, html in zip(pdf["url"], bases, pdf["html"]):
-                try:
-                    triples = _extract_page(base, html, vocab_registry, xml_mode)
-                except Exception as exc:  # noqa: BLE001 - quarantine bad pages
-                    out["url"].append(url)
-                    for c in TRIPLE_COLS[1:-1]:
-                        out[c].append(None)
-                    out["error"].append(f"{type(exc).__name__}: {exc}")
-                    continue
-                for t in triples:
-                    out["url"].append(url)
-                    out["subj"].append(t.subj)
-                    out["pred"].append(t.pred)
-                    out["obj"].append(t.obj)
-                    out["obj_kind"].append(t.obj_kind)
-                    out["obj_lang"].append(t.obj_lang)
-                    out["obj_datatype"].append(t.obj_datatype)
-                    out["error"].append(None)
-            yield pd.DataFrame(out, columns=TRIPLE_COLS)
-
-    return extract_fn
-
-
-def extract_triples(
-    pages: "DataFrame",
-    vocab_registry: dict | None = None,
-    xml_mode: bool = False,
-    keep_errors: bool = False,
-) -> "DataFrame":
-    """pages(url, html, ...) -> triples DataFrame.
-
-    Only ``url`` and ``html`` are selected, so Catalyst pushes column
-    pruning into the source scan regardless of the pages schema.
+    Only ``url``, ``html`` and ``base_iri`` are selected, so Catalyst
+    pushes column pruning into the source scan regardless of the pages
+    schema.
     """
     cols = ["url", "html"] + (
         ["base_iri"] if "base_iri" in pages.columns else []
     )
-    raw = pages.select(*cols).mapInPandas(
-        make_extract_fn(vocab_registry, xml_mode), schema=TRIPLES_SCHEMA
-    )
+    raw = map_rows(pages, cols, _extract_page, TRIPLES_SCHEMA)
     if keep_errors:
         return raw
     return raw.filter(raw.error.isNull()).drop("error")
-
-
-def extract_text_fn():
-    """mapInPandas fn: pages(url, html) -> (url, text) using the same
-    tokenizer — backs the byte-identity invariant check at scale."""
-    import pandas as pd
-
-    from ..functions.microdata import extract_text
-
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            texts = []
-            for html in pdf["html"]:
-                if isinstance(html, (bytes, bytearray, memoryview)):
-                    html = decode_html(bytes(html))
-                texts.append(extract_text(html))
-            yield pd.DataFrame({"url": pdf["url"], "text": texts})
-
-    return fn
 
 
 TEXT_SCHEMA = T.StructType(
@@ -155,6 +91,17 @@ TEXT_SCHEMA = T.StructType(
         T.StructField("text", T.StringType(), True),
     ]
 )
+
+
+def page_text(url: str, html) -> list[tuple]:
+    """(url, text) kernel over the same tokenizer as extraction — backs
+    the byte-identity invariant check at scale."""
+    return [(url, extract_text(html))]
+
+
+def extract_text_fn():
+    """mapInPandas fn: pages(url, html) -> (url, text) via :func:`page_text`."""
+    return rows_fn(page_text, ["url", "html"], TEXT_SCHEMA.fieldNames())
 
 
 CHARSET_SCHEMA = T.StructType(
@@ -166,36 +113,20 @@ CHARSET_SCHEMA = T.StructType(
 )
 
 
+def _page_charset(url: str, html) -> list[tuple]:
+    if html is None:
+        return [(url, None, None)]
+    charset = "utf-8" if isinstance(html, str) else sniff_charset(bytes(html))
+    return [(url, charset, extract_text(html))]
+
+
 def page_charsets(pages: "DataFrame") -> "DataFrame":
     """(url, charset, text): the detected charset (BOM -> meta prescan
     -> UTF-8 fallback, functions/charset.py) plus the extracted text of
     the page decoded under it — the observability query for the decode
     contract. Same execution shape as extraction: column-pruned scan,
     one Arrow ``mapInPandas``, no shuffle."""
-    import pandas as pd
-
-    from ..functions.microdata import extract_text
-
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            charsets, texts = [], []
-            for html in pdf["html"]:
-                if html is None:
-                    charsets.append(None)
-                    texts.append(None)
-                    continue
-                raw = bytes(html) if not isinstance(html, str) else None
-                if raw is None:
-                    charsets.append("utf-8")
-                    texts.append(extract_text(html))
-                else:
-                    charsets.append(sniff_charset(raw))
-                    texts.append(extract_text(decode_html(raw)))
-            yield pd.DataFrame(
-                {"url": pdf["url"], "charset": charsets, "text": texts}
-            )
-
-    return pages.select("url", "html").mapInPandas(fn, schema=CHARSET_SCHEMA)
+    return map_rows(pages, ["url", "html"], _page_charset, CHARSET_SCHEMA)
 
 
 METRICS_SCHEMA = T.StructType(
@@ -239,22 +170,15 @@ class _MetricsTap:
         self.inner.on_end()
 
 
-def compute_page_metrics(
-    url: str, html, vocab_registry: dict | None = None
-) -> tuple:
+def compute_page_metrics(url: str, html) -> tuple:
     """Pure per-page metrics kernel (no Spark): one tokenizer pass with
     the listener tap. Returns the METRICS_SCHEMA tuple; shared by the
     distributed UDF below and the driver oracle's golden VALUES."""
-    if isinstance(html, (bytes, bytearray, memoryview)):
-        html = decode_html(bytes(html))
+    html = decode_html(html)  # decode errors raise; parse errors quarantine
     try:
-        extractor = MicrodataExtractor(url or "", vocab_registry)
+        extractor = MicrodataExtractor(url or "")
         tap = _MetricsTap(extractor)
-        from ..functions.fast_html import FastHtmlTokenizer
-
-        tokenizer = FastHtmlTokenizer(tap)
-        tokenizer.feed(html)
-        tokenizer.end()
+        feed_document(html, tap)
         items = {t.subj for t in extractor.triples}
         return (url, tap.n_tags, tap.n_text_events, tap.n_text_chars,
                 len(extractor.triples), len(items), None)
@@ -263,23 +187,14 @@ def compute_page_metrics(
                 f"{type(exc).__name__}: {exc}")
 
 
-def page_metrics(pages: "DataFrame", vocab_registry: dict | None = None) -> "DataFrame":
+def page_metrics(pages: "DataFrame") -> "DataFrame":
     """Per-page extraction metrics (lineage feed): tag/text counts,
     triples emitted, distinct items. Same single-pass tokenizer run,
     with the listener tap counting events (S5 in SURVEY §2.1)."""
-    import pandas as pd
-
-    cols = [f.name for f in METRICS_SCHEMA.fields]
-
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = [
-                compute_page_metrics(url, html, vocab_registry)
-                for url, html in zip(pdf["url"], pdf["html"])
-            ]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return pages.select("url", "html").mapInPandas(fn, schema=METRICS_SCHEMA)
+    return map_rows(
+        pages, ["url", "html"],
+        lambda url, html: [compute_page_metrics(url, html)], METRICS_SCHEMA,
+    )
 
 
 MAIN_CONTENT_SCHEMA = T.StructType(
@@ -309,24 +224,14 @@ def main_content(
     shares the extractor's tokenizer, so content/boilerplate decisions
     see exactly the structure the KG extraction saw.
     """
-    import pandas as pd
-
     from ..functions.boilerplate import extract_main_content
 
-    cols = [f.name for f in MAIN_CONTENT_SCHEMA.fields]
-
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = [
-                extract_main_content(
-                    url, html, min_block_chars, max_link_density_u
-                )
-                for url, html in zip(pdf["url"], pdf["html"])
-            ]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return pages.select("url", "html").mapInPandas(
-        fn, schema=MAIN_CONTENT_SCHEMA
+    return map_rows(
+        pages, ["url", "html"],
+        lambda url, html: [
+            extract_main_content(url, html, min_block_chars, max_link_density_u)
+        ],
+        MAIN_CONTENT_SCHEMA,
     )
 
 
@@ -407,14 +312,8 @@ def compute_page_meta(url: str, html) -> tuple:
 
     from ..functions.iri import resolve_iri
 
-    if isinstance(html, (bytes, bytearray, memoryview)):
-        html = decode_html(bytes(html))
     tap = _MetaTap()
-    from ..functions.fast_html import FastHtmlTokenizer
-
-    tokenizer = FastHtmlTokenizer(tap)
-    tokenizer.feed(html)
-    tokenizer.end()
+    feed_document(html, tap)
     title = _re.sub(r"\s+", " ", "".join(tap.title_parts)).strip() or None
     canonical = None
     if tap.canonical_href is not None:
@@ -429,16 +328,7 @@ def page_meta(pages: "DataFrame") -> "DataFrame":
     """Distributed page-card metadata extraction: one tokenizer pass
     per page inside an Arrow mapInPandas batch (never a second parse,
     never a per-row Python UDF)."""
-    import pandas as pd
-
-    cols = [f.name for f in PAGE_META_SCHEMA.fields]
-
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = [
-                compute_page_meta(url, html)
-                for url, html in zip(pdf["url"], pdf["html"])
-            ]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return pages.select("url", "html").mapInPandas(fn, schema=PAGE_META_SCHEMA)
+    return map_rows(
+        pages, ["url", "html"],
+        lambda url, html: [compute_page_meta(url, html)], PAGE_META_SCHEMA,
+    )

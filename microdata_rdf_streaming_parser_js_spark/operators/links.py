@@ -161,17 +161,19 @@ def compute_anchors(html) -> list[tuple[str, str]]:
     with the :class:`_AnchorTap` listener — shared verbatim by the
     DuckDB oracle replay in plans/queries.py, so both engines run the
     identical extraction."""
-    from ..functions.fast_html import FastHtmlTokenizer
+    from ..functions.microdata import feed_document
 
-    if isinstance(html, (bytes, bytearray, memoryview)):
-        from ..functions.charset import decode_html
-
-        html = decode_html(bytes(html))
     tap = _AnchorTap()
-    tok = FastHtmlTokenizer(tap)
-    tok.feed(html)
-    tok.end()
+    feed_document(html, tap)
     return tap.anchors
+
+
+def _page_anchors(url: str, html) -> list[tuple]:
+    try:
+        pairs = compute_anchors(html)
+    except Exception:  # noqa: BLE001 — malformed page: no anchors
+        return []
+    return [(url, href, text) for href, text in pairs]
 
 
 def extract_anchors(
@@ -186,6 +188,8 @@ def extract_anchors(
     mapInPandas on the pruned (url, html) scan; zero shuffles."""
     from pyspark.sql import types as T
 
+    from .rows import map_rows
+
     schema = T.StructType(
         [
             T.StructField("src_url", T.StringType(), False),
@@ -193,27 +197,7 @@ def extract_anchors(
             T.StructField("anchor_text", T.StringType(), True),
         ]
     )
-
-    def anchor_fn(batches):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        for pdf in batches:
-            src, dst, txt = [], [], []
-            for url, html in zip(pdf[url_col], pdf[html_col]):
-                try:
-                    pairs = compute_anchors(html)
-                except Exception:  # noqa: BLE001 — malformed page: no anchors
-                    continue
-                for href, text in pairs:
-                    src.append(url)
-                    dst.append(href)
-                    txt.append(text)
-            yield pd.DataFrame(
-                {"src_url": src, "dst_url": dst, "anchor_text": txt},
-                columns=["src_url", "dst_url", "anchor_text"],
-            )
-
-    return pages.select(url_col, html_col).mapInPandas(anchor_fn, schema=schema)
+    return map_rows(pages, [url_col, html_col], _page_anchors, schema)
 
 
 _TRACKING_PARAM = r"^(utm_[A-Za-z0-9_]*|fbclid|gclid)(=|$)"

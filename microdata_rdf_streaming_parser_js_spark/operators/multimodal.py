@@ -36,14 +36,14 @@ Arrow batch iteration, partitioning, explode plan) is identical.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .rows import map_rows
+
 if TYPE_CHECKING:
-    import pandas as pd
     from pyspark.sql import DataFrame
 
 MEDIA_SCHEMA = T.StructType(
@@ -409,32 +409,17 @@ def synthesize_media(spark, n: int = 100) -> "DataFrame":
 # Arrow-batched operators
 # ---------------------------------------------------------------------------
 
-def decode_image_features(
-    media: "DataFrame", batch_size_hint: int = 256
-) -> "DataFrame":
+def _payload(content) -> bytes:
+    return bytes(content) if content is not None else b""
+
+
+def decode_image_features(media: "DataFrame") -> "DataFrame":
     """image rows -> (media_id, width, height, channels, phash,
     features) via mapInPandas over the real PPM kernel."""
-    import pandas as pd
-
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out = {k: [] for k in ("media_id", "width", "height", "channels", "phash", "features")}
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                w, h, c, ph, feats = image_features_kernel(
-                    bytes(content) if content is not None else b""
-                )
-                out["media_id"].append(mid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["channels"].append(c)
-                out["phash"].append(ph)
-                out["features"].append(feats)
-            yield pd.DataFrame(out)
-
-    return (
-        media.filter(F.col("kind") == "image")
-        .select("media_id", "content")
-        .mapInPandas(fn, schema=IMAGE_FEATURES_SCHEMA)
+    return map_rows(
+        media.filter(F.col("kind") == "image"), ["media_id", "content"],
+        lambda mid, content: [(mid, *image_features_kernel(_payload(content)))],
+        IMAGE_FEATURES_SCHEMA,
     )
 
 
@@ -456,26 +441,14 @@ def resize_images(
     (Arrow batches of opaque bytes in AND out — the shape that matters
     for a 100 TB media pipeline: bytes never hit the driver, batches
     stream)."""
-    import pandas as pd
 
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out = {k: [] for k in ("media_id", "width", "height", "content", "n_bytes")}
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                resized = resize_kernel(
-                    bytes(content) if content is not None else b"", width, height
-                )
-                out["media_id"].append(mid)
-                out["width"].append(width)
-                out["height"].append(height)
-                out["content"].append(resized)
-                out["n_bytes"].append(len(resized))
-            yield pd.DataFrame(out)
+    def resize(mid, content):
+        resized = resize_kernel(_payload(content), width, height)
+        return [(mid, width, height, resized, len(resized))]
 
-    return (
-        media.filter(F.col("kind") == "image")
-        .select("media_id", "content")
-        .mapInPandas(fn, schema=RESIZED_SCHEMA)
+    return map_rows(
+        media.filter(F.col("kind") == "image"), ["media_id", "content"],
+        resize, RESIZED_SCHEMA,
     )
 
 
@@ -492,24 +465,10 @@ AUDIO_FEATURES_SCHEMA = T.StructType(
 def decode_audio_features(media: "DataFrame") -> "DataFrame":
     """audio rows -> (sample_rate, exact PCM duration, block-energy
     fingerprint) via mapInPandas over the real WAV kernel."""
-    import pandas as pd
-
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out = {k: [] for k in ("media_id", "sample_rate", "duration_ms", "fingerprint")}
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                raw = bytes(content) if content is not None else b""
-                rate, dur, fp = audio_features_kernel(raw)
-                out["media_id"].append(mid)
-                out["sample_rate"].append(rate)
-                out["duration_ms"].append(dur)
-                out["fingerprint"].append(fp)
-            yield pd.DataFrame(out)
-
-    return (
-        media.filter(F.col("kind") == "audio")
-        .select("media_id", "content")
-        .mapInPandas(fn, schema=AUDIO_FEATURES_SCHEMA)
+    return map_rows(
+        media.filter(F.col("kind") == "audio"), ["media_id", "content"],
+        lambda mid, content: [(mid, *audio_features_kernel(_payload(content)))],
+        AUDIO_FEATURES_SCHEMA,
     )
 
 
@@ -532,28 +491,13 @@ def decode_video_frames(media: "DataFrame", every_nth: int = 2) -> "DataFrame":
     the Arrow batch (a single video row yields several output rows), so
     frame rows stream out without ever collecting a whole video's
     frames anywhere but the worker."""
-    import pandas as pd
-
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "media_id", "frame_idx", "ts_ms", "width", "height", "frame_phash"
-            )}
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                raw = bytes(content) if content is not None else b""
-                for idx, ts_ms, w, h, ph in video_frames_kernel(raw, every_nth):
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(idx)
-                    out["ts_ms"].append(ts_ms)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["frame_phash"].append(ph)
-            yield pd.DataFrame(out)
-
-    return (
-        media.filter(F.col("kind") == "video")
-        .select("media_id", "content")
-        .mapInPandas(fn, schema=VIDEO_FRAMES_SCHEMA)
+    return map_rows(
+        media.filter(F.col("kind") == "video"), ["media_id", "content"],
+        lambda mid, content: [
+            (mid, *frame)
+            for frame in video_frames_kernel(_payload(content), every_nth)
+        ],
+        VIDEO_FRAMES_SCHEMA,
     )
 
 
@@ -745,35 +689,32 @@ def audio_block_energies(content: bytes, n_blocks: int = _FP_BLOCKS) -> list[int
     return out
 
 
+AUDIO_BLOCKS_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType(), True),
+        T.StructField("block_idx", T.LongType(), True),
+        T.StructField("energy", T.LongType(), True),
+    ]
+)
+
+
 def decode_audio_blocks(
     media: "DataFrame", n_blocks: int = _FP_BLOCKS
 ) -> "DataFrame":
     """audio rows -> (media_id, block_idx, energy) via mapInPandas over
     the real WAV kernel (1->n_blocks expansion inside the Arrow
     batch)."""
-    import pandas as pd
 
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out = {"media_id": [], "block_idx": [], "energy": []}
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                raw = bytes(content) if content is not None else b""
-                try:
-                    energies = audio_block_energies(raw, n_blocks)
-                except Exception:  # noqa: BLE001 — undecodable: skip row
-                    continue
-                for i, e in enumerate(energies):
-                    out["media_id"].append(mid)
-                    out["block_idx"].append(i)
-                    out["energy"].append(e)
-            yield pd.DataFrame(out)
+    def blocks(mid, content):
+        try:
+            energies = audio_block_energies(_payload(content), n_blocks)
+        except Exception:  # noqa: BLE001 — undecodable: skip row
+            return []
+        return [(mid, i, e) for i, e in enumerate(energies)]
 
-    return (
-        media.filter(F.col("kind") == "audio")
-        .select("media_id", "content")
-        .mapInPandas(
-            fn, schema="media_id long, block_idx long, energy long"
-        )
+    return map_rows(
+        media.filter(F.col("kind") == "audio"), ["media_id", "content"], blocks,
+        AUDIO_BLOCKS_SCHEMA,
     )
 
 

@@ -310,10 +310,10 @@ def compression_signal(
     shape as extraction; at 100 TB this rides the same corpus pass as
     the other scan-side quality features.
     """
-    import pandas as pd
     from pyspark.sql import types as T
 
     from ..functions.text import compress_ratio_u
+    from .rows import map_rows
 
     schema = T.StructType(
         [
@@ -324,17 +324,11 @@ def compression_signal(
         ]
     )
 
-    def fn(batches):
-        for pdf in batches:
-            rows = []
-            for i, text in zip(pdf[id_col], pdf[text_col]):
-                n, c, r = compress_ratio_u(text or "", level)
-                rows.append((str(i), n, c, r))
-            yield pd.DataFrame(
-                rows, columns=["id", "n_bytes", "comp_bytes", "ratio_u"]
-            )
-
-    return df.select(id_col, text_col).mapInPandas(fn, schema=schema)
+    return map_rows(
+        df, [id_col, text_col],
+        lambda i, text: [(str(i), *compress_ratio_u(text or "", level))],
+        schema,
+    )
 
 
 def cooccurrence_counts(

@@ -37,9 +37,9 @@ def link_and_canonicalize(triples: "DataFrame") -> "DataFrame":
     return canonicalize_subjects(triples, link_entities(triples))
 
 
-def build_triples(pages: "DataFrame", vocab_registry: dict | None = None) -> "DataFrame":
+def build_triples(pages: "DataFrame") -> "DataFrame":
     """Logical plan pages -> distinct canonical triples (no writes, no cache)."""
-    canonical = link_and_canonicalize(skolemize(extract_triples(pages, vocab_registry)))
+    canonical = link_and_canonicalize(skolemize(extract_triples(pages)))
     return dedup_triples(canonical, per_graph=True)
 
 
@@ -50,7 +50,6 @@ def run_pipeline(
     n_buckets: int = 64,
     wave_size: int = 64,
     salt_n: int = 8,
-    vocab_registry: dict | None = None,
     input_fingerprint: str = "",
     resume: bool = True,
 ) -> dict:
@@ -70,7 +69,7 @@ def run_pipeline(
 
     for wave in waves:
         wave_pages = pages_b.filter(F.col("host_bucket").isin(wave)).drop("host_bucket")
-        extracted = skolemize(extract_triples(wave_pages, vocab_registry)).persist()
+        extracted = skolemize(extract_triples(wave_pages)).persist()
         try:
             materialize_wave(
                 spark,

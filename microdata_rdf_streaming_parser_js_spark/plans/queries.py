@@ -435,12 +435,11 @@ FROM o FULL OUTER JOIN i ON o.iri = i.iri"""
 def q_extract_text(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     """Byte-identity invariant as a driver-checked query: distributed
     text extraction vs the synthesis-time text column."""
-    from ..operators.extract import TEXT_SCHEMA, extract_text_fn
+    from ..operators.extract import TEXT_SCHEMA, page_text
+    from ..operators.rows import map_rows
 
     pages = synthesize_oracle_pages(spark)
-    return pages.select("url", "html").mapInPandas(
-        extract_text_fn(), schema=TEXT_SCHEMA
-    )
+    return map_rows(pages, ["url", "html"], page_text, TEXT_SCHEMA)
 
 
 def sql_extract_text() -> str:

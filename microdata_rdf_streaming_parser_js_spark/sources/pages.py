@@ -87,14 +87,6 @@ def synthesize_fixture_pages(
     return spark.createDataFrame(rows, schema=PAGES_SCHEMA)
 
 
-def fixture_for_url(url: str):
-    """Recover the fixture backing a synthesized url (test oracle)."""
-    name = url.rsplit("/", 2)[-2]
-    from ..fixtures import FIXTURES_BY_NAME
-
-    return FIXTURES_BY_NAME[name]
-
-
 def pages_from_documents(
     spark: "SparkSession", sf_dir: str, n_hosts: int = 50
 ) -> "DataFrame":

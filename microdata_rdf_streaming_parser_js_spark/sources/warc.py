@@ -22,12 +22,12 @@ envelope is stripped at its own blank line.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
 from pyspark.sql import types as T
 
 from ..functions.charset import decode_html
+from ..operators.rows import map_rows
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
@@ -134,34 +134,29 @@ WARC_PAGES_SCHEMA = T.StructType(
 )
 
 
+def _file_pages(content) -> list[tuple]:
+    """One WARC file's (url, html, base_iri) page rows."""
+    return [
+        (
+            url,
+            # BOM/meta charset sniff with UTF-8 fallback — the same
+            # decode contract as the parquet page path; the HTTP
+            # envelope's charset is the last-resort default
+            # (in-document evidence outranks transport)
+            decode_html(html, default=headers.get("x-http-charset")),
+            # a crawled document's base IRI is its own URI unless the
+            # writer pinned one explicitly
+            headers.get("warc-x-base-iri", url),
+        )
+        for url, html, headers in parse_warc(bytes(content))
+    ]
+
+
 def read_warc_pages(spark: "SparkSession", path: str) -> "DataFrame":
     """All response records under ``path`` (a dir of .warc files) as a
     (url, html) pages DataFrame: binaryFile scan (file-per-task) ->
     Arrow batch record walk -> exploded page rows."""
-    import pandas as pd
-
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            urls: list[str] = []
-            htmls: list[str] = []
-            bases: list[str] = []
-            for content in pdf["content"]:
-                for url, html, headers in parse_warc(bytes(content)):
-                    urls.append(url)
-                    # BOM/meta charset sniff with UTF-8 fallback — the
-                    # same decode contract as the parquet page path;
-                    # the HTTP envelope's charset is the last-resort
-                    # default (in-document evidence outranks transport)
-                    htmls.append(
-                        decode_html(html,
-                                    default=headers.get("x-http-charset"))
-                    )
-                    # a crawled document's base IRI is its own URI
-                    # unless the writer pinned one explicitly
-                    bases.append(headers.get("warc-x-base-iri", url))
-            yield pd.DataFrame({"url": urls, "html": htmls, "base_iri": bases})
-
     files = spark.read.format("binaryFile").option(
         "pathGlobFilter", "*.warc"
     ).load(path)
-    return files.select("content").mapInPandas(fn, schema=WARC_PAGES_SCHEMA)
+    return map_rows(files, ["content"], _file_pages, WARC_PAGES_SCHEMA)

@@ -36,10 +36,10 @@ def read_pages_stream(
     )
 
 
-def stream_triples(pages_stream: "DataFrame", vocab_registry: dict | None = None) -> "DataFrame":
+def stream_triples(pages_stream: "DataFrame") -> "DataFrame":
     """Streaming pages -> streaming skolemized triples (stateless:
     extraction is per-row, so no watermark is needed)."""
-    return skolemize(extract_triples(pages_stream, vocab_registry))
+    return skolemize(extract_triples(pages_stream))
 
 
 def start_pipeline_stream(

@@ -140,3 +140,61 @@ def test_compress_ratio_u_repetitive_vs_prose():
     assert compress_ratio_u("") == (0, 0, 0)
     # deterministic
     assert compress_ratio_u("hello world") == compress_ratio_u("hello world")
+
+
+def test_rows_fn_yields_kernel_rows_per_batch_in_schema_order():
+    """The one Arrow crossing: kernel(*row) over ``in_cols`` yields 0,
+    1 or many rows; one frame per batch, columns in schema order, and a
+    batch whose rows all yield nothing is an empty frame, not skipped."""
+    import pandas as pd
+
+    from microdata_rdf_streaming_parser_js_spark.operators.rows import rows_fn
+
+    fn = rows_fn(lambda k, n: [(n, k)] * n, ["k", "n"], ["n", "k"])
+    batches = [
+        pd.DataFrame({"x": [9, 9, 9], "n": [0, 1, 3], "k": ["a", "b", "c"]}),
+        pd.DataFrame({"x": [9], "n": [0], "k": ["z"]}),
+    ]
+    out = list(fn(iter(batches)))
+    assert len(out) == 2
+    assert [list(f.columns) for f in out] == [["n", "k"], ["n", "k"]]
+    assert out[0].values.tolist() == [[1, "b"], [3, "c"], [3, "c"], [3, "c"]]
+    assert out[1].empty
+
+
+def test_extract_page_rows_quarantine_and_base_iri():
+    from microdata_rdf_streaming_parser_js_spark.operators.extract import (
+        MAX_HTML_BYTES,
+        TRIPLE_COLS,
+        _extract_page,
+    )
+
+    url = "http://u.example/dir/"
+    html = (
+        '<div itemscope itemtype="http://schema.org/Thing">'
+        '<a itemprop="url" href="p.html">x</a></div>'
+    )
+
+    def objs(rows):
+        assert all(len(r) == len(TRIPLE_COLS) and r[-1] is None for r in rows)
+        return {r[3] for r in rows}
+
+    # no base_iri column: the page url is the base
+    assert "http://u.example/dir/p.html" in objs(_extract_page(url, html))
+    assert "http://b.example/p.html" in objs(
+        _extract_page(url, html.encode("utf-8"), "http://b.example/")
+    )
+    # a null base_iri parses with base "" (never falls back to the url),
+    # so the relative href quarantines the page
+    [row] = _extract_page(url, html, None)
+    assert row[:-1] == (url,) + (None,) * 6
+    assert row[-1].startswith("InvalidIriError: Found invalid baseIRI ''")
+
+    assert _extract_page(url, None) == [
+        (url,) + (None,) * 6 + ("ValueError: null html",)
+    ]
+    big = b"a" * (MAX_HTML_BYTES + 1)
+    assert _extract_page(url, big) == [
+        (url,) + (None,) * 6
+        + (f"ValueError: html too large: {MAX_HTML_BYTES + 1} bytes",)
+    ]
