@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..functions.lattice import linear_weights
 from ..functions.text import _tokens
+from .similarity import lit_array
 
 if TYPE_CHECKING:
     from pyspark.sql import Column, DataFrame
@@ -49,7 +50,7 @@ def linear_classify(
     over the token array inside the row — no explode, no groupBy, no
     join. Each corpus row is read, scored, and labeled in place."""
     w = linear_weights(n_buckets, seed)
-    warr = F.array(*[F.lit(int(x)).cast("long") for x in w])
+    warr = lit_array(w, "long")
 
     def _w(t: "Column") -> "Column":
         bucket = (

@@ -433,25 +433,20 @@ def simhash_signatures(
         F.conv(F.substring(h, 1, 8), 16, 10).cast("long").alias("h1"),
         F.conv(F.substring(h, 9, 8), 16, 10).cast("long").alias("h2"),
     )
+    # the 63 per-bit sums and the bit fold are SQL text: one py4j call
+    # per expression instead of one per Column operator
     aggs = [
-        F.sum(
-            F.when(
-                F.col("h1" if b < 32 else "h2")
-                .bitwiseAND(F.lit(1 << (b % 32)).cast("long"))
-                != 0,
-                1,
-            ).otherwise(-1)
-        ).alias(f"b{b}")
+        F.expr(
+            f"sum(CASE WHEN ({'h1' if b < 32 else 'h2'} & {1 << (b % 32)}L)"
+            f" != 0 THEN 1 ELSE -1 END) AS b{b}"
+        )
         for b in range(63)
     ]
     sums = ex.groupBy("doc_id").agg(*aggs)
-    sig = F.lit(0).cast("long")
-    for b in range(63):
-        sig = sig.bitwiseOR(
-            F.when(F.col(f"b{b}") > 0, F.lit(1 << b).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
+    sig = F.expr(
+        "0L"
+        + "".join(f" | CASE WHEN b{b} > 0 THEN {1 << b}L ELSE 0L END" for b in range(63))
+    )
     return sums.select("doc_id", sig.alias("sig"))
 
 
@@ -505,24 +500,22 @@ def _simhash_block_rows(
     spans = _simhash_chunk_spans(bits, n_chunks)
     agree = n_chunks - max_hamming
 
-    def chunk_val(off: int, w: int):
-        return F.shiftrightunsigned(F.col("sig"), off).bitwiseAND(
-            F.lit((1 << w) - 1).cast("long")
-        )
-
+    # one SQL expression for all block keys (one py4j call, not one
+    # per Column operator)
     blocks = []
     for bid, combo in enumerate(combinations(range(n_chunks), agree)):
-        key = F.lit(0).cast("long")
+        key = "0L"
         shift = 0
         for c in combo:
             off, w = spans[c]
-            key = key.bitwiseOR(F.shiftleft(chunk_val(off, w), shift))
+            key += (
+                f" | shiftleft(shiftrightunsigned(sig, {off})"
+                f" & {(1 << w) - 1}L, {shift})"
+            )
             shift += w
-        blocks.append(
-            F.struct(F.lit(bid).alias("block_id"), key.alias("block_key"))
-        )
+        blocks.append(f"named_struct('block_id', {bid}, 'block_key', {key})")
     return sig.select(
-        "doc_id", "sig", F.explode(F.array(*blocks)).alias("b")
+        "doc_id", "sig", F.expr(f"explode(array({', '.join(blocks)}))").alias("b")
     ).select("doc_id", "sig", "b.block_id", "b.block_key")
 
 
@@ -591,18 +584,19 @@ def simhash32_signatures(
         F.col(id_col).alias("doc_id"),
         F.explode(tokens(F.col(text_col))).alias("t"),
     ).select("doc_id", F.md5("t").alias("h"))
+    high = ", ".join(f"'{c}'" for c in _HEX_HIGH)
     aggs = [
-        F.sum(
-            F.when(F.substring("h", b + 1, 1).isin(*_HEX_HIGH), 1).otherwise(-1)
-        ).alias(f"b{b}")
+        F.expr(
+            f"sum(CASE WHEN substring(h, {b + 1}, 1) IN ({high})"
+            f" THEN 1 ELSE -1 END) AS b{b}"
+        )
         for b in range(32)
     ]
     sums = ex.groupBy("doc_id").agg(*aggs)
-    sig = F.lit(0).cast("long")
-    for b in range(32):
-        sig = sig + F.when(
-            F.col(f"b{b}") > 0, F.lit(1 << b).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
+    sig = F.expr(
+        "0L"
+        + "".join(f" + CASE WHEN b{b} > 0 THEN {1 << b}L ELSE 0L END" for b in range(32))
+    )
     return sums.select("doc_id", sig.alias("sig"))
 
 

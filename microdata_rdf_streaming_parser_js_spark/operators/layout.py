@@ -17,6 +17,8 @@ from typing import TYPE_CHECKING
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from .similarity import lit_array
+
 if TYPE_CHECKING:
     from pyspark.sql import Column, DataFrame
 
@@ -136,7 +138,7 @@ def bloom_member(key: "Column", mask_words: list[int], m: int = 4096, k: int = 3
     :func:`bloom_build`, so a filter built by one job prunes another
     job's probe side with zero shuffle and zero joins: the mask is a
     literal array and the test is pure bit codegen)."""
-    mask = F.array(*[F.lit(int(w)).cast("long") for w in mask_words])
+    mask = lit_array(mask_words, "long")
     cond = None
     for i in range(k):
         pos = (

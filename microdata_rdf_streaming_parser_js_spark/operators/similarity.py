@@ -25,6 +25,8 @@
 
 from __future__ import annotations
 
+import math
+from collections.abc import Iterable
 from typing import TYPE_CHECKING
 
 from pyspark.sql import Window
@@ -32,6 +34,26 @@ from pyspark.sql import functions as F
 
 if TYPE_CHECKING:
     from pyspark.sql import Column, DataFrame
+
+
+def lit_array(values: Iterable, elem_type: str) -> "Column":
+    """Plan-time literal ``array<double>`` or ``array<bigint>`` (centroids,
+    codewords, lattice planes) built from one SQL expression instead of
+    one ``F.lit`` per element: the same constant-folded, non-null array
+    as ``F.array(*[F.lit(x) ...])``, without a py4j round trip per
+    element. Python's ``repr`` of a float round-trips exactly, so each
+    double parses back to the identical IEEE value."""
+    if elem_type == "double":
+        xs = [float(x) for x in values]
+        if not xs or not all(map(math.isfinite, xs)):
+            return F.array(*[F.lit(x) for x in xs])
+        return F.expr("array(" + ", ".join(f"{x!r}D" for x in xs) + ")")
+    if elem_type == "long":
+        ns = [int(x) for x in values]
+        if not ns:
+            return F.array(*[F.lit(n).cast("long") for n in ns])
+        return F.expr("array(" + ", ".join(f"{n}L" for n in ns) + ")")
+    raise ValueError(f"lit_array: unsupported element type {elem_type!r}")
 
 
 def dot(a: "Column", b: "Column") -> "Column":
@@ -108,7 +130,7 @@ def _signature(vec: "Column", dim: int, n_planes: int) -> "Column":
 
     bits = []
     for row in plane_weights(dim, n_planes):
-        w = F.array(*[F.lit(float(x)) for x in row])
+        w = lit_array(row, "double")
         proj = F.aggregate(
             F.zip_with(vec, w, lambda v, wt: v * wt),
             F.lit(0.0),
@@ -253,7 +275,7 @@ def kmeans_centroids_u(
                     F.aggregate(
                         F.zip_with(
                             F.col("v"),
-                            F.array(*[F.lit(int(x)).cast("long") for x in cv]),
+                            lit_array(cv, "long"),
                             lambda a, b: (a - b) * (a - b),
                         ),
                         F.lit(0).cast("long"),
@@ -282,7 +304,7 @@ def _cent_scores(vec: "Column", cents: list[list[float]]) -> "Column":
     return F.array(
         *[
             F.struct(
-                cosine(vec, F.array(*[F.lit(x) for x in cvec])).alias("cos"),
+                cosine(vec, lit_array(cvec, "double")).alias("cos"),
                 F.lit(-cid).alias("negcid"),
             )
             for cid, cvec in enumerate(cents)
@@ -469,7 +491,7 @@ def kmeans_assign(
                 F.aggregate(
                     F.zip_with(
                         F.col("v"),
-                        F.array(*[F.lit(int(x)).cast("long") for x in cv]),
+                        lit_array(cv, "long"),
                         lambda a, b: (a - b) * (a - b),
                     ),
                     F.lit(0).cast("long"),
@@ -511,7 +533,7 @@ def kmeans_assign_dist(
                 F.aggregate(
                     F.zip_with(
                         F.col("v"),
-                        F.array(*[F.lit(int(x)).cast("long") for x in cv]),
+                        lit_array(cv, "long"),
                         lambda a, b: (a - b) * (a - b),
                     ),
                     F.lit(0).cast("long"),
@@ -638,7 +660,7 @@ def random_projection(
     e = F.col(vec_col).cast("array<double>")
     comps = []
     for j, row in enumerate(planes):
-        w = F.array(*[F.lit(float(x)) for x in row])
+        w = lit_array(row, "double")
         d = dot(e, w)
         comps.append(
             F.struct(
@@ -703,7 +725,7 @@ def _pq_sub_argmin(vu_slice: "Column", book: list[list[int]]) -> "Column":
                 F.aggregate(
                     F.zip_with(
                         vu_slice,
-                        F.array(*[F.lit(int(x)).cast("long") for x in cw]),
+                        lit_array(cw, "long"),
                         lambda a, b: (a - b) * (a - b),
                     ),
                     F.lit(0).cast("long"),
@@ -803,7 +825,7 @@ def pq_topk(
                     F.aggregate(
                         F.zip_with(
                             qslice,
-                            F.array(*[F.lit(int(x)).cast("long") for x in cw]),
+                            lit_array(cw, "long"),
                             lambda a, b: (a - b) * (a - b),
                         ),
                         F.lit(0).cast("long"),
@@ -902,7 +924,7 @@ def ivfpq_topk(
                     F.aggregate(
                         F.zip_with(
                             qslice,
-                            F.array(*[F.lit(int(x)).cast("long") for x in cw]),
+                            lit_array(cw, "long"),
                             lambda a, b: (a - b) * (a - b),
                         ),
                         F.lit(0).cast("long"),

@@ -47,7 +47,12 @@ from ..operators.dedup import (
 )
 from ..operators.extract import extract_triples
 from ..operators.linking import detect_mentions, score_and_link
-from ..operators.similarity import cosine_topk, embedding_near_dup, lsh_topk
+from ..operators.similarity import (
+    cosine_topk,
+    embedding_near_dup,
+    lit_array,
+    lsh_topk,
+)
 from ..operators.skolemize import DEFAULT_SALT, skolemize
 from ..sources.pages import synthesize_oracle_pages
 
@@ -1335,7 +1340,7 @@ def q_embedding_near_dup(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     emb = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    noise = F.array(*[F.lit(x) for x in _noise_vector()])
+    noise = lit_array(_noise_vector(), "double")
     dups = emb.filter(F.col("vec_id") < _ND_NDUP).select(
         (F.col("vec_id") + _ND_ID_OFFSET).alias("vec_id"),
         F.zip_with("embedding", noise, lambda v, n: v + n).alias("embedding"),
@@ -4910,7 +4915,7 @@ def q_semantic_dedup(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     emb = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    noise = F.array(*[F.lit(x) for x in _noise_vector()])
+    noise = lit_array(_noise_vector(), "double")
     dups = emb.filter(F.col("vec_id") < _ND_NDUP).select(
         (F.col("vec_id") + _ND_ID_OFFSET).alias("vec_id"),
         F.zip_with("embedding", noise, lambda v, n: v + n).alias("embedding"),
@@ -14100,7 +14105,7 @@ def q_semantic_decontaminate(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     ev = base.where(is_eval).select(
         F.col("vec_id").alias("eval_vec_id"), "embedding"
     )
-    noise = F.array(*[F.lit(x) for x in _noise_vector()])
+    noise = lit_array(_noise_vector(), "double")
     para = base.where(is_eval).select(
         (F.col("vec_id") + _SDC_ID_OFFSET).alias("vec_id"),
         F.zip_with("embedding", noise, lambda v, n: v + n).alias("embedding"),

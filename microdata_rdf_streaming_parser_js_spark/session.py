@@ -53,6 +53,14 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
+        # PySpark's DataFrame debugging wraps every Column/functions call
+        # to record its Python call site in the JVM: a conf read plus
+        # set/clear round-trips over py4j and a Python stack walk per
+        # call. Plans built from plan-time literals (centroids,
+        # codebooks, per-bit masks) make tens of thousands of such
+        # calls; without the wrapper a query's driver-side build time
+        # is its py4j traffic alone. Errors keep their JVM stack traces.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # local mode: shuffles spill through spark.local.dir on the driver
     # host; pointing it at tmpfs keeps multi-hundred-MB shuffle writes
